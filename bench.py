@@ -41,11 +41,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-class _EnvSkip(Exception):
-    """Control-flow marker: the measurement was skipped for an
-    environment gap (recorded in `skipped`), not a code error."""
-
-
 HEADLINE = [
     # relational core
     "q1_pricing_summary",
@@ -294,9 +289,6 @@ def main() -> None:
     silence_bounded_window_warns(spark)
 
     errors: dict[str, str] = {}
-    # environment gaps (missing optional library/jar), NOT code errors —
-    # reported separately so error_count stays a regression signal
-    skipped: dict[str, str] = {}
 
     def _evict_ann_index() -> None:
         # q_ann_index_build must measure the BUILD on every sample; the
@@ -407,79 +399,6 @@ def main() -> None:
         trip_samples = []
         errors["trip_pipeline"] = f"{type(exc).__name__}: {str(exc)[:300]}"
 
-    # v2 sessionization dual (transformWithStateInPandas + RocksDB +
-    # explicit timers — streaming/trip_sessions_v2.py): attempt a real
-    # availableNow run over a sharded fixture and record events/s. The
-    # state API v2 wire protocol needs google.protobuf; when the module
-    # is absent (this container — see tests/test_streaming.py's
-    # importorskip) that is an ENVIRONMENT gap, not a code regression,
-    # so it is probed up front and recorded under `skipped`, keeping
-    # error_count a pure code-regression signal (VERDICT r8 next #3).
-    # The probe re-runs every round: if the sandbox ever gains protobuf
-    # the real measurement happens with no code change.
-    trip_v2_eps: float | None = None
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-    except ImportError:
-        skipped["trip_pipeline_v2"] = "skipped (env: google.protobuf absent)"
-    try:
-        if "trip_pipeline_v2" in skipped:
-            raise _EnvSkip()
-        import shutil
-
-        from flink_template_spark.parse import read_trip_events_stream
-        from flink_template_spark.streaming.trip_sessions_v2 import (
-            rocksdb_conf,
-            sessionize_trips_v2,
-        )
-
-        n_trips_v2, ept_v2 = 2000, 50
-        fx2 = os.path.join(
-            tempfile.gettempdir(),
-            f"bench_trip_events_{n_trips_v2}x{ept_v2}x{cpus}_v2_sharded",
-        )
-        if os.path.exists(fx2):
-            n_events_v2 = n_trips_v2 * ept_v2
-        else:
-            n_events_v2 = write_scaled_fixture(
-                fx2, n_trips=n_trips_v2, events_per_trip=ept_v2, n_shards=cpus
-            )
-        prev_conf = {k: spark.conf.get(k, None) for k in rocksdb_conf()}
-        for k, v in rocksdb_conf().items():
-            spark.conf.set(k, v)
-        try:
-            ckpt2 = tempfile.mkdtemp(prefix="bench_v2_ckpt_")
-            try:
-                out = sessionize_trips_v2(read_trip_events_stream(spark, fx2))
-                t0 = time.perf_counter()
-                q2 = (
-                    out.writeStream.outputMode("append")
-                    .format("noop")
-                    .option("checkpointLocation", ckpt2)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                finished = q2.awaitTermination(600)
-                if not finished:
-                    # timeout returns False (no exception): stop the
-                    # straggler so it can't pollute later timings, and
-                    # record the miss instead of an inflated rate
-                    q2.stop()
-                    raise TimeoutError("v2 availableNow run exceeded 600s")
-                trip_v2_eps = round(n_events_v2 / (time.perf_counter() - t0), 1)
-            finally:
-                shutil.rmtree(ckpt2, ignore_errors=True)
-        finally:
-            for k, v in prev_conf.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
-    except _EnvSkip:
-        pass
-    except Exception as exc:
-        errors["trip_pipeline_v2"] = f"{type(exc).__name__}: {str(exc)[:300]}"
-
     # Min-of-2 for EVERY extended query (VERDICT r7 next #4: the old
     # >3 s-only rerun gate let one-off session-accumulation spikes
     # masquerade as real regressions in round-over-round comparison —
@@ -523,7 +442,6 @@ def main() -> None:
         "trip_pipeline_external_cpu_share": trip_ext_cpu,
         "trip_pipeline_kthread_cpu_share": trip_kt_cpu,
         "trip_pipeline_steal_share": trip_steal,
-        "trip_pipeline_v2_events_per_sec": trip_v2_eps,
         "load1_start": load1_start,
         "load1_end": _load1(),
         "run_steal_share": _steal_share(steal0, _steal_probe()),
@@ -531,8 +449,6 @@ def main() -> None:
     }
     if errors:
         full["errors"] = errors
-    if skipped:
-        full["skipped"] = skipped
     # smoke runs must NOT clobber the committed full record — the
     # sidecar is the round-over-round extended-wall baseline (a smoke
     # run once wiped all ~290 walls and swapped sf 0.1 -> 0.01)
@@ -560,7 +476,6 @@ def main() -> None:
         "trip_pipeline_external_cpu_share": trip_ext_cpu,
         "trip_pipeline_kthread_cpu_share": trip_kt_cpu,
         "trip_pipeline_steal_share": trip_steal,
-        "trip_pipeline_v2_events_per_sec": trip_v2_eps,
         "load1_start": load1_start,
         "load1_end": full["load1_end"],
         "run_steal_share": full["run_steal_share"],
@@ -571,8 +486,6 @@ def main() -> None:
         # under the 2000-char tail no matter how many queries error.
         headline["error_names"] = sorted(errors)[:20]
         headline["error_count"] = len(errors)
-    if skipped:
-        headline["skipped_env"] = sorted(skipped)[:5]
     line = json.dumps(headline, separators=(",", ":"))
     if len(line) > 1900:  # belt-and-braces: drop per-query walls before overflowing
         headline["queries"] = {"_dropped_for_size": len(timings)}

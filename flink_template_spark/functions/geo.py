@@ -14,6 +14,8 @@ reproduced (SURVEY.md §2.4 quirks):
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -35,6 +37,16 @@ def haversine_km(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Colu
         + F.cos(rlat1) * F.cos(rlat2) * F.sin(dlon / 2) * F.sin(dlon / 2)
     )
     return 2 * EARTH_RADIUS_KM * F.asin(F.sqrt(a))
+
+
+def haversine_km_scalar(lat1: float, lon1: float, lat2: float, lon2: float) -> float:
+    """The same distance on Python floats, for per-key pandas state
+    (streaming.trip_sessions finalizes a session's GPS path with it)."""
+    p1, p2 = math.radians(lat1), math.radians(lat2)
+    dp = math.radians(lat2 - lat1)
+    dl = math.radians(lon2 - lon1)
+    a = math.sin(dp / 2) ** 2 + math.cos(p1) * math.cos(p2) * math.sin(dl / 2) ** 2
+    return 2 * EARTH_RADIUS_KM * math.asin(math.sqrt(a))
 
 
 def haversine_km_sql(lat1: str, lon1: str, lat2: str, lon2: str) -> str:

@@ -48,63 +48,19 @@ def pair_sims_q(
     universe: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "fold",
 ) -> DataFrame:
     """(d, c, sim_q): micro-unit-quantized cosine for every ordered
     pair of the (blocked, small) universe, self-pairs included
     (sim_q(d,d) — a facility covers itself). Degenerate vectors
     are excluded by the cosine-family valid_vec contract.
 
-    ``impl="blocked"`` scores via the blocked exact-fold kernel
-    (operators.similarity.pair_cos_blocked — bit-identical doubles,
-    each unordered pair rounded once and mirrored, diagonal linear;
-    row-identity pinned by
-    tests/test_r13_opt.py::test_pair_sims_q_blocked_identical).
-    MEASURED NEGATIVE at fixture scale (optimization r13): the greedy
-    loop read 2.71 s blocked vs 2.10 s fold min-of-2 in-session A/B —
-    unlike the thresholded consumers, this table keeps EVERY pair, so
-    the kernel saves folds but still rounds n² rows, and its extra
-    union/checkpoint stages cost more than the folds it removed. The
-    cross-join fold therefore stays the default; the blocked form is
-    kept for universes big enough that fold cost dominates (re-try at
-    the cluster round)."""
+    A cross-join fold, not the blocked pair kernel
+    (operators.similarity.pair_cos_blocked): this table keeps EVERY
+    pair, so the kernel's extra mirror/union stages cost more than the
+    folds it saves (measured 2.71 s vs 2.10 s on the greedy loop)."""
     u = universe.filter(valid_vec(F.col(vec_col))).select(
         F.col(id_col), F.col(vec_col), l2_norm(F.col(vec_col)).alias("__n")
     )
-    if impl == "blocked":
-        from flink_template_spark.operators.similarity import (
-            pair_cos_blocked,
-        )
-
-        upper = pair_cos_blocked(
-            universe, None, id_col=id_col, vec_col=vec_col
-        ).select(
-            "id_a",
-            "id_b",
-            F.round(F.col("raw_cos") * 1_000_000.0, 0)
-            .cast("bigint")
-            .alias("sim_q"),
-        )
-        sym = upper.select(
-            F.col("id_a").alias("d"), F.col("id_b").alias("c"), "sim_q"
-        ).unionAll(
-            upper.select(
-                F.col("id_b").alias("d"), F.col("id_a").alias("c"), "sim_q"
-            )
-        )
-        diag = u.select(
-            F.col(id_col).alias("d"),
-            F.col(id_col).alias("c"),
-            F.round(
-                dot(F.col(vec_col), F.col(vec_col))
-                / (F.col("__n") * F.col("__n"))
-                * 1_000_000.0,
-                0,
-            )
-            .cast("bigint")
-            .alias("sim_q"),
-        )
-        return sym.unionAll(diag)
     # norms are computed ONCE per row before the cross join (linear),
     # not inside the pair cosine (quadratic): dot/(na*nb) is the exact
     # expression tree cosine() builds, evaluated on identical operands,

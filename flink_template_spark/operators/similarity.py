@@ -81,9 +81,10 @@ def centroid_cos_arrow(cvecs: "list[list[float]]", vec_col):
     bit-for-bit (pinned by
     tests/test_r13_opt.py::test_ivf_assign_mapside_identical). Rounding
     stays in the Spark plan (r12 kernel discipline). Inputs must be
-    valid_vec-filtered (NaN would cross the Arrow NaN→NULL boundary)
-    and fixed-width (a width-mismatched vector row yields NULL sims,
-    like the zip_with pad → NULL fold)."""
+    valid_vec-filtered (NaN would cross the Arrow NaN→NULL boundary);
+    a row whose width is not the centroids' yields NULL sims, like the
+    zip_with pad → NULL fold, and leaves every other row of its batch
+    scored."""
     import numpy as np
 
     from pyspark.sql.functions import pandas_udf
@@ -102,14 +103,11 @@ def centroid_cos_arrow(cvecs: "list[list[float]]", vec_col):
     def fn(v: pd.Series) -> pd.Series:
         n = len(v)
         out = [None] * n
-        idx = np.flatnonzero(v.notna().to_numpy())
+        # only rows of width d are scored; off-width and NULL rows stay NULL
+        width_d = v.map(lambda x: x is not None and len(x) == d).to_numpy(bool)
+        idx = np.flatnonzero(width_d)
         if len(idx):
-            try:
-                V = np.array(v.iloc[idx].tolist(), dtype=np.float64)
-                if V.ndim != 2 or V.shape[1] != d:
-                    raise ValueError
-            except (ValueError, TypeError):
-                return pd.Series(out, dtype=object)  # off-width → NULL
+            V = np.array(v.iloc[idx].tolist(), dtype=np.float64)
             nrow = len(idx)
             vacc = np.zeros(nrow)
             for i in range(d):
@@ -180,9 +178,11 @@ def ivf_assign(
     cid_arr = F.array(*[F.lit(r[centroid_id]) for r in c_rows])
     sims = centroid_cos_arrow(cvecs, vec_col)
     rounded = F.transform(sims, lambda x: F.round(x, 6))
-    pick = F.element_at(
-        cid_arr, F.array_position(rounded, F.array_max(rounded)).cast("int")
-    )
+    pos = F.array_position(rounded, F.array_max(rounded)).cast("int")
+    # explicit NULL guard: element_at over a literal array returns an
+    # element, not NULL, for a NULL index (seen on Spark 4.1), so an
+    # off-width row's NULL sims would otherwise still pick a cluster
+    pick = F.when(pos.isNotNull(), F.element_at(cid_arr, pos))
     return base.select(
         id_col,
         vec_col,
@@ -200,7 +200,7 @@ _PAIR_BLOCK_TARGET = 256
 
 def pair_cos_blocked(
     vectors: DataFrame,
-    min_raw: float | None,
+    min_raw: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     block_col: str | None = None,
@@ -245,7 +245,7 @@ def pair_cos_blocked(
       the pre-unit-normalized triplet shape.
     - ``max_raw``: keep the LOW tail too — a row survives if raw ≥
       min_raw OR raw ≤ max_raw (the triplet positive/hard-negative
-      band pair); pass min_raw=None for a single low tail."""
+      band pair)."""
     import numpy as np
 
     id_type = vectors.schema[id_col].dataType.simpleString()
@@ -351,14 +351,9 @@ def pair_cos_blocked(
                             if want_cos
                             else acc
                         )
-                        if min_raw is None and max_raw is None:
-                            mask = np.ones(cos.shape, dtype=bool)
-                        else:
-                            mask = np.zeros(cos.shape, dtype=bool)
-                            if min_raw is not None:
-                                mask |= cos >= min_raw
-                            if max_raw is not None:
-                                mask |= cos <= max_raw
+                        mask = cos >= min_raw
+                        if max_raw is not None:
+                            mask |= cos <= max_raw
                         if same:
                             mask &= ia[:, None] < ib[None, :]
                         r, c = np.nonzero(mask)

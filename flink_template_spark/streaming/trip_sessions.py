@@ -9,11 +9,11 @@ FIRE_AND_PURGE + clear()                    → emit on timeout + state.remove()
 AggregateFunction add/getResult             → buffered state + pandas finalize
   (TripAggregatorApplication.kt:58-164)
 
-Re-arm rule (ProcessingTimeTrigger.kt:30-42): on an element, if there is
-no deadline, or the existing deadline is closer than now+min_retention,
-register a timer at now+max_retention; otherwise keep the existing
-deadline. On timer fire: emit the aggregate and purge (FIRE_AND_PURGE,
-:15-24). Late events after a purge re-open a fresh session (W6).
+One session function serves both entry points; they differ only in
+its deadline rule (the processing-time re-arm rule or the event-time
+gap) and the matching GroupStateTimeout. On timeout: emit the aggregate
+and purge (FIRE_AND_PURGE, :15-24). Late events after a purge re-open a
+fresh session (W6).
 
 State stays bounded per key (the reference's retention bound, SURVEY.md
 §4.1): buffers hold only PID-bearing readings, deduped by timestamp ON
@@ -24,9 +24,8 @@ every emit.
 
 from __future__ import annotations
 
-import math
-from collections.abc import Iterator
-from typing import Any
+from collections.abc import Callable, Iterator
+from functools import partial
 
 import pandas as pd
 
@@ -34,9 +33,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from flink_template_spark.functions.geo import haversine_km_scalar
+from flink_template_spark.operators.trip_agg import STOPPED_SPEED_KMH
+
 MIN_RETENTION_MS = 10
 MAX_RETENTION_MS = 4000
-STOPPED_SPEED_KMH = 5
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -69,83 +70,36 @@ STATE_SCHEMA = T.StructType(
 )
 
 
-def _haversine_km(lat1: float, lon1: float, lat2: float, lon2: float) -> float:
-    r = 6371.0
-    p1, p2 = math.radians(lat1), math.radians(lat2)
-    dp = math.radians(lat2 - lat1)
-    dl = math.radians(lon2 - lon1)
-    a = math.sin(dp / 2) ** 2 + math.cos(p1) * math.cos(p2) * math.sin(dl / 2) ** 2
-    return 2 * r * math.asin(math.sqrt(a))
-
-
-def _finalize(trip_id: int, st: dict[str, Any]) -> pd.DataFrame:
-    """A6-A9 over the session state (already ts-deduped on insert;
-    intended semantics — see operators.trip_agg for the quirk ledger)."""
-    gps_seen = {
-        ts: (la, lo)
-        for ts, la, lo in zip(st["gps_ts"], st["gps_lat"], st["gps_lon"])
-    }
-    sp_seen = dict(zip(st["sp_ts"], st["sp_kmh"]))
-
-    gps = sorted(gps_seen.items())
+def _finalize(trip_id: int, st: tuple) -> pd.DataFrame:
+    """A6-A9 over one session's state tuple (STATE_SCHEMA order; the
+    buffers are ts-deduped on insert). Intended semantics — see
+    operators.trip_agg for the quirk ledger, including why stopped time
+    is the sum of deltas between consecutive stopped readings."""
+    gps_ts, gps_lat, gps_lon, sp_ts, sp_kmh, vin, n_events, _ = st
+    gps = sorted(zip(gps_ts, gps_lat, gps_lon))
     dist = sum(
-        _haversine_km(gps[i - 1][1][0], gps[i - 1][1][1], gps[i][1][0], gps[i][1][1])
-        for i in range(1, len(gps))
+        haversine_km_scalar(la0, lo0, la1, lo1)
+        for (_, la0, lo0), (_, la1, lo1) in zip(gps, gps[1:])
     )
-
-    sp = sorted(sp_seen.items())
-    stopped_us = 0
-    run_start = None
-    prev_ts = None
-    for ts, v in sp:
-        if v < STOPPED_SPEED_KMH:
-            if run_start is None:
-                run_start = ts
-            prev_ts = ts
-        else:
-            if run_start is not None:
-                stopped_us += prev_ts - run_start
-                run_start = None
-    if run_start is not None:
-        stopped_us += prev_ts - run_start
-
-    all_ts = [t for t, _ in gps] + [t for t, _ in sp]
+    sp = sorted(zip(sp_ts, sp_kmh))
+    stopped_us = sum(
+        t1 - t0
+        for (t0, v0), (t1, v1) in zip(sp, sp[1:])
+        if v0 < STOPPED_SPEED_KMH and v1 < STOPPED_SPEED_KMH
+    )
+    all_ts = [*gps_ts, *sp_ts]
     total_s = (max(all_ts) // 1_000_000 - min(all_ts) // 1_000_000) if all_ts else 0
     stopped_s = stopped_us // 1_000_000
-    return pd.DataFrame(
-        [
-            {
-                "trip_id": trip_id,
-                "vehicle_id": st["vin"],
-                "n_events": st["n_events"],
-                "distance_km": float(dist),
-                "total_s": int(total_s),
-                "moving_s": int(total_s - stopped_s),
-                "stopped_s": int(stopped_s),
-            }
-        ]
-    )
+    row = (trip_id, vin, n_events, float(dist), total_s, total_s - stopped_s, stopped_s)
+    return pd.DataFrame([row], columns=OUTPUT_SCHEMA.fieldNames())
 
 
-_STATE_FIELDS = [
-    "gps_ts", "gps_lat", "gps_lon", "sp_ts", "sp_kmh",
-    "vin", "n_events", "deadline_ms",
-]
-
-
-def _fold(prev: tuple | None, pdfs: Iterator[pd.DataFrame]):
-    """Fold a batch of rows into the (possibly existing) session
-    buffers. Returns the updated buffers plus the max event-time seen,
-    in epoch ms (0 if the batch had no rows). Shared by the
-    applyInPandasWithState operator here and the transformWithState
-    processor in trip_sessions_v2."""
-    if prev is not None:
-        gps_ts, gps_lat, gps_lon, sp_ts, sp_kmh, vin, n_events, deadline_ms = prev
-        gps_ts, gps_lat, gps_lon = list(gps_ts), list(gps_lat), list(gps_lon)
-        sp_ts, sp_kmh = list(sp_ts), list(sp_kmh)
-    else:
-        gps_ts, gps_lat, gps_lon, sp_ts, sp_kmh = [], [], [], [], []
-        vin, n_events, deadline_ms = None, 0, 0
+def _fold(prev: tuple | None, pdfs: Iterator[pd.DataFrame]) -> tuple[tuple, int]:
+    """Fold a batch of rows into the (possibly existing) session state.
+    Returns the updated state tuple plus the max event-time seen, in
+    epoch ms (0 if the batch had no rows)."""
+    *buffers, vin, n_events, deadline_ms = prev or ((), (), (), (), (), None, 0, 0)
+    gps_ts, gps_lat, gps_lon, sp_ts, sp_kmh = map(list, buffers)
 
     max_event_ms = 0
     # membership sets make the Q4 insert-dedup O(1) per event
@@ -157,53 +111,78 @@ def _fold(prev: tuple | None, pdfs: Iterator[pd.DataFrame]):
                 vin = row.vin
             ts = int(row.ts.value // 1_000)  # pandas ns → us
             max_event_ms = max(max_event_ms, ts // 1_000)
-            if row.lat is not None and not pd.isna(row.lat) and ts not in gps_known:
+            # pd.isna covers both None and NaN
+            if not pd.isna(row.lat) and ts not in gps_known:
                 gps_known.add(ts)
                 gps_ts.append(ts)
                 gps_lat.append(float(row.lat))
                 gps_lon.append(float(row.lon))
-            if (
-                row.speed_kmh is not None
-                and not pd.isna(row.speed_kmh)
-                and ts not in sp_known
-            ):
+            if not pd.isna(row.speed_kmh) and ts not in sp_known:
                 sp_known.add(ts)
                 sp_ts.append(ts)
                 sp_kmh.append(int(row.speed_kmh))
-    return (
-        gps_ts, gps_lat, gps_lon, sp_ts, sp_kmh, vin, n_events, deadline_ms,
-        max_event_ms,
-    )
+    st = (gps_ts, gps_lat, gps_lon, sp_ts, sp_kmh, vin, n_events, deadline_ms)
+    return st, max_event_ms
 
 
-def _ingest(state: GroupState, pdfs: Iterator[pd.DataFrame]):
-    return _fold(state.get if state.exists else None, pdfs)
+def _processing_time_deadline(state: GroupState, deadline_ms: int, _: int) -> int:
+    # ProcessingTimeTrigger re-arm rule (ProcessingTimeTrigger.kt:30-42): on
+    # an element, if there is no deadline, or the existing deadline is closer
+    # than now+min_retention, set it to now+max_retention; else keep it.
+    now = state.getCurrentProcessingTimeMs()
+    if deadline_ms == 0 or deadline_ms < now + MIN_RETENTION_MS:
+        deadline_ms = now + MAX_RETENTION_MS
+    state.setTimeoutDuration(max(int(deadline_ms - now), 1))
+    return deadline_ms
+
+
+def _event_time_deadline(state: GroupState, deadline_ms: int, max_event_ms: int) -> int:
+    # event-time session gap: the deadline only ever moves FORWARD to
+    # last-event-time + gap (late rows below the old deadline don't
+    # shrink it); fires when the watermark passes it — replay-
+    # deterministic, unlike any wall-clock rule.
+    deadline_ms = max(deadline_ms, max_event_ms + MAX_RETENTION_MS)
+    state.setTimeoutTimestamp(deadline_ms)
+    return deadline_ms
 
 
 def _session_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    key: tuple,
+    pdfs: Iterator[pd.DataFrame],
+    state: GroupState,
+    deadline_rule: Callable[[GroupState, int, int], int],
 ) -> Iterator[pd.DataFrame]:
+    """``deadline_rule(state, deadline_ms or 0, max event ms of the batch)``
+    arms the state's timeout and returns the new deadline_ms."""
     (trip_id,) = key
     if state.hasTimedOut:
-        st = dict(zip(_STATE_FIELDS, state.get))
+        st = state.get
         state.remove()
         yield _finalize(trip_id, st)
         return
 
-    (
-        gps_ts, gps_lat, gps_lon, sp_ts, sp_kmh, vin, n_events, deadline_ms, _
-    ) = _ingest(state, pdfs)
+    st, max_event_ms = _fold(state.get if state.exists else None, pdfs)
+    *buffers, deadline_ms = st
+    state.update((*buffers, deadline_rule(state, deadline_ms, max_event_ms)))
 
-    # ProcessingTimeTrigger re-arm rule (ProcessingTimeTrigger.kt:30-42)
-    now = state.getCurrentProcessingTimeMs()
-    if deadline_ms == 0 or deadline_ms < now + MIN_RETENTION_MS:
-        deadline_ms = now + MAX_RETENTION_MS
-    state.update(
-        (gps_ts, gps_lat, gps_lon, sp_ts, sp_kmh, vin, n_events, deadline_ms)
+
+def _sessionize(
+    parsed_stream: DataFrame,
+    watermark: str,
+    deadline_rule: Callable[[GroupState, int, int], int],
+    timeout: str,
+) -> DataFrame:
+    return (
+        parsed_stream.withWatermark("ts", watermark)
+        .groupBy("trip_id")
+        .applyInPandasWithState(
+            partial(_session_fn, deadline_rule=deadline_rule),
+            OUTPUT_SCHEMA,
+            STATE_SCHEMA,
+            "append",
+            timeout,
+        )
     )
-    state.setTimeoutDuration(max(int(deadline_ms - now), 1))
-    return
-    yield  # pragma: no cover — makes this a generator
 
 
 def sessionize_trips(
@@ -217,45 +196,12 @@ def sessionize_trips(
     (BoundedOutOfOrdernessTimestampExtractor,
     TripAggregatorApplication.kt:168-174); firing remains purely
     processing-time-driven (the reference's onEventTime is CONTINUE)."""
-    return (
-        parsed_stream.withWatermark("ts", watermark)
-        .groupBy("trip_id")
-        .applyInPandasWithState(
-            _session_fn,
-            OUTPUT_SCHEMA,
-            STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.ProcessingTimeTimeout,
-        )
+    return _sessionize(
+        parsed_stream,
+        watermark,
+        _processing_time_deadline,
+        GroupStateTimeout.ProcessingTimeTimeout,
     )
-
-
-def _session_fn_event_time(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    (trip_id,) = key
-    if state.hasTimedOut:
-        st = dict(zip(_STATE_FIELDS, state.get))
-        state.remove()
-        yield _finalize(trip_id, st)
-        return
-
-    (
-        gps_ts, gps_lat, gps_lon, sp_ts, sp_kmh, vin, n_events, deadline_ms,
-        max_event_ms,
-    ) = _ingest(state, pdfs)
-
-    # event-time session gap: the deadline only ever moves FORWARD to
-    # last-event-time + gap (late rows below the old deadline don't
-    # shrink it); fires when the watermark passes it — replay-
-    # deterministic, unlike any wall-clock rule.
-    deadline_ms = max(deadline_ms, max_event_ms + MAX_RETENTION_MS)
-    state.update(
-        (gps_ts, gps_lat, gps_lon, sp_ts, sp_kmh, vin, n_events, deadline_ms)
-    )
-    state.setTimeoutTimestamp(deadline_ms)
-    return
-    yield  # pragma: no cover — makes this a generator
 
 
 def sessionize_trips_event_time(
@@ -269,14 +215,9 @@ def sessionize_trips_event_time(
     clock — a processing-time trigger would merge everything into one
     session, the event-time gap reproduces production sessions exactly).
     """
-    return (
-        parsed_stream.withWatermark("ts", watermark)
-        .groupBy("trip_id")
-        .applyInPandasWithState(
-            _session_fn_event_time,
-            OUTPUT_SCHEMA,
-            STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    return _sessionize(
+        parsed_stream,
+        watermark,
+        _event_time_deadline,
+        GroupStateTimeout.EventTimeTimeout,
     )

@@ -73,9 +73,9 @@ def main() -> None:
     # probed r13: ProcessingTimeTimeout keeps the query scheduling empty
     # ~0.75 s batches indefinitely (146 empty batches / 120 s at 5k
     # events, never terminating), so a wall-clock rate would measure
-    # timer idling, not processing. Both variants share _ingest/_finalize
-    # and the state schema, so the per-event stateful work measured here
-    # is the same code the processing-time path runs per batch.
+    # timer idling, not processing. Both variants are the same session
+    # function with a different deadline rule, so the per-event stateful
+    # work measured here is the code the processing-time path runs.
     from flink_template_spark.parse import read_trip_events_stream
     from flink_template_spark.sources.trip_fixtures import write_scaled_fixture
     from flink_template_spark.streaming.trip_sessions import (

@@ -527,6 +527,38 @@ def test_cosine_family_survives_zero_norm_vectors(spark):
     assert dec[2] == [0.0, 0.0, 0.0, 0.0]  # lossless zero round-trip
 
 
+def test_ivf_assign_off_width_row_nulls_only_itself(spark):
+    """One 3-wide vector among 4-wide ones in the SAME Arrow batch gets
+    NULL sims and cluster NULL; every other row keeps, bit for bit, the
+    sims and cluster it gets when the bad row is absent."""
+    from flink_template_spark.operators.similarity import (
+        centroid_cos_arrow,
+        ivf_assign,
+    )
+
+    from pyspark.sql import functions as F
+
+    schema = "id long, embedding array<double>"
+    good = [(i, [1.0 + i % 3, 0.5 * i, 1.0, -0.25 * i]) for i in range(1, 9)]
+    cvecs = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0], [0.0, 0.0, 1.0, 1.0]]
+    cents = spark.createDataFrame(list(enumerate(cvecs)), schema)
+
+    def run(rows):
+        # coalesce(1): one partition, so all rows share one Arrow batch
+        df = spark.createDataFrame(rows, schema).coalesce(1)
+        sims = centroid_cos_arrow(cvecs, F.col("embedding")).alias("s")
+        out = ivf_assign(df, cents, id_col="id", centroid_id="id")
+        return {  # float.hex: the raw doubles, bit for bit
+            r.id: (r.s and [x.hex() for x in r.s], r.cluster)
+            for r in out.select("id", "cluster", sims).collect()
+        }
+
+    got = run(good[:4] + [(100, [1.0, 2.0, 3.0])] + good[4:])
+    assert got.pop(100) == (None, None)
+    assert got == run(good)
+    assert all(s is not None and c is not None for s, c in got.values())
+
+
 def test_exact_moments_single_row_group_is_null_not_abort(spark, monkeypatch):
     """A group with one event has undefined sample variance: NULL (the
     var_samp convention, mirrored by the oracle's NULLIF), not an

@@ -610,25 +610,6 @@ def test_near_dup_lsh_blocked_identical(spark, sf_dir):
     assert g == r and len(g) > 0
 
 
-def test_pair_sims_q_blocked_identical(spark, sf_dir):
-    """pair_sims_q's blocked build (kernel + mirror + linear diagonal)
-    must emit the identical (d, c, sim_q) table as the cross-join fold
-    it replaced — full ordered table, self-pairs included — and the
-    greedy picks must be unchanged on the real fixture."""
-    from flink_template_spark.operators.coreset import (
-        facility_location_greedy,
-        pair_sims_q,
-    )
-    from flink_template_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("label") == 0)
-    got = sorted(map(tuple, pair_sims_q(emb, impl="blocked").collect()))
-    ref = sorted(map(tuple, pair_sims_q(emb, impl="fold").collect()))
-    assert got == ref and len(got) > 0
-    picks = facility_location_greedy(emb, k=3)
-    assert [p["round"] for p in picks] == [1, 2, 3]
-
-
 def test_coreset_broadcast_guard_fallback_identical(spark, monkeypatch):
     """Above BROADCAST_COV_MAX_ROWS the greedy loop must fall back to
     the shuffle join and still produce the identical pick sequence."""

@@ -127,84 +127,6 @@ def test_streaming_trip_sessions_event_time(spark, tmp_path):
     assert (t2.total_s, t2.stopped_s, t2.moving_s) == (30, 10, 20)
 
 
-def test_streaming_trip_sessions_v2_state_api(spark, tmp_path):
-    """State API v2 dual (transformWithStateInPandas + RocksDB store +
-    explicit timers): same fixture, same expected session aggregates as
-    the v1 applyInPandasWithState operator.
-
-    Skipped where ``protobuf`` is absent: Spark's state API v2 wire
-    protocol needs it (pyspark/sql/streaming/proto/StateMessage_pb2),
-    and this container can't install packages. The operator itself is
-    cluster-ready; plan construction is still covered below."""
-    pytest.importorskip("google.protobuf")
-    from flink_template_spark.streaming.trip_sessions_v2 import (
-        rocksdb_conf,
-        sessionize_trips_v2,
-    )
-
-    in_dir = tmp_path / "in_v2"
-    in_dir.mkdir()
-    write_fixture(str(in_dir / "batch1.jsonl"))
-
-    prev = {k: spark.conf.get(k, None) for k in rocksdb_conf()}
-    for k, v in rocksdb_conf().items():
-        spark.conf.set(k, v)
-    try:
-        parsed = read_trip_events_stream(spark, str(in_dir))
-        out = sessionize_trips_v2(parsed)
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("trip_sessions_v2")
-            .option("checkpointLocation", str(tmp_path / "ckpt_v2"))
-            .start()
-        )
-        try:
-            deadline = time.time() + 90
-            rows = {}
-            while time.time() < deadline:
-                rows = {
-                    r.trip_id: r
-                    for r in spark.sql("SELECT * FROM trip_sessions_v2").collect()
-                }
-                if len(rows) >= 3:
-                    break
-                time.sleep(0.5)
-        finally:
-            q.stop()
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-    assert set(rows) == {1, 2, 3}
-    t1 = rows[1]
-    assert t1.vehicle_id == "VIN00001"
-    assert (t1.total_s, t1.stopped_s, t1.moving_s) == (55, 20, 35)
-    assert t1.distance_km > 0
-    t2 = rows[2]
-    assert (t2.total_s, t2.stopped_s, t2.moving_s) == (30, 10, 20)
-
-
-def test_trip_sessions_v2_plan_builds(spark, tmp_path):
-    """The transformWithStateInPandas plan analyzes (schema, streaming
-    flag) without protobuf — only query START needs the v2 wire
-    protocol. Guards the operator's plumbing in this container."""
-    from flink_template_spark.streaming.trip_sessions_v2 import (
-        OUTPUT_SCHEMA,
-        sessionize_trips_v2,
-    )
-
-    in_dir = tmp_path / "in_v2_plan"
-    in_dir.mkdir()
-    write_fixture(str(in_dir / "batch1.jsonl"))
-    out = sessionize_trips_v2(read_trip_events_stream(spark, str(in_dir)))
-    assert out.isStreaming
-    assert out.schema == OUTPUT_SCHEMA
-
-
 def test_streaming_tumbling_watermark(spark, tmp_path):
     in_dir = tmp_path / "ev"
     in_dir.mkdir()
