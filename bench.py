@@ -89,196 +89,14 @@ def extended_names() -> list[str]:
     return [n for n in _plans.QUERIES if n not in hl]
 
 
-def _load1() -> float | None:
-    """1-minute load average, for adjudicating load-polluted readings
-    (BASELINE.md trip-rate rule; VERDICT r10 next #3). None where the
-    platform lacks getloadavg. NOTE: during a bench run the 1-min
-    average mostly reflects the bench's OWN prior queries, so the
-    primary adjudicator is _external_cpu_share below — load1 is kept
-    as the start-of-run ambient reading (taken before any Spark work)."""
-    try:
-        return round(os.getloadavg()[0], 2)
-    except (AttributeError, OSError):
-        return None
-
-
-def _cpu_totals() -> tuple[int, int] | None:
-    """(total, idle) jiffies from /proc/stat's aggregate cpu line."""
-    try:
-        with open("/proc/stat") as fh:
-            parts = fh.readline().split()
-        vals = [int(v) for v in parts[1:]]
-        idle = vals[3] + (vals[4] if len(vals) > 4 else 0)  # idle+iowait
-        return sum(vals), idle
-    except (OSError, ValueError, IndexError):
-        return None
-
-
-def _steal_probe() -> tuple[int, int] | None:
-    """(total, steal) jiffies from /proc/stat — hypervisor steal time.
-
-    Added in the r12 optimization round after two full bench runs on a
-    0.3-load guest read 17-21 s headline while a third read 14.3 s with
-    no code or guest-load change: host-level contention (steal) is
-    INVISIBLE to _external_cpu_share (which attributes guest process
-    CPU) and to the load average, so a 'clean' adjudication could still
-    sit on a throttled host. Recording the steal share alongside lets a
-    suspicious reading be re-adjudicated against hypervisor contention
-    the same way kthread share covers kernel burn (ADVICE r11).
-
-    Denominator convention: sum(vals) includes the guest/guest_nice
-    columns (vals[8:]), which Linux already folds into user/nice — the
-    same convention _cpu_totals uses, kept so the two probes' shares
-    are directly comparable. On a bare guest (no nested VMs) the guest
-    columns are 0 and the two conventions coincide; the understatement
-    is bounded by the nested-guest share either way (ADVICE r12)."""
-    try:
-        with open("/proc/stat") as fh:
-            parts = fh.readline().split()
-        vals = [int(v) for v in parts[1:]]
-        steal = vals[7] if len(vals) > 7 else 0
-        return sum(vals), steal
-    except (OSError, ValueError, IndexError):
-        return None
-
-
-def _steal_share(before: tuple | None, after: tuple | None) -> float | None:
-    if not before or not after:
-        return None
-    d_total = after[0] - before[0]
-    if d_total <= 0:
-        return None
-    return round((after[1] - before[1]) / d_total, 4)
-
-
-def _cpu_probe(root_pid: int) -> tuple | None:
-    """One consistent /proc sweep → (cpu_totals, ours, kthreads):
-    per-pid utime+stime jiffies of root_pid's process tree (the python
-    driver, the Spark JVM, its Python workers) and of the kernel-thread
-    tree. PER-PID (not tree totals) so the consumer can difference pid
-    by pid: a long-lived worker that EXITS inside the window would
-    otherwise subtract its whole pre-window history from the tree
-    delta and misattribute the bench's own CPU as external. A pid that
-    exits mid-window loses only its in-window burn (counted as
-    external — small and bounded); short-lived already-reaped children
-    are likewise missed. The kernel tree root is DISCOVERED (comm ==
-    'kthreadd'), never assumed to be pid 2 — inside a PID namespace
-    pid 2 is an arbitrary user process and kernel threads are usually
-    invisible (empty kthread snapshot, correctly)."""
-    try:
-        totals = _cpu_totals()
-        procs: dict[int, tuple[int, int]] = {}
-        kthreadd = None
-        for d in os.listdir("/proc"):
-            if not d.isdigit():
-                continue
-            try:
-                with open(f"/proc/{d}/stat") as fh:
-                    s = fh.read()
-            except OSError:
-                continue  # raced with process exit
-            head, rest_s = s.rsplit(")", 1)
-            rest = rest_s.split()
-            pid = int(d)
-            procs[pid] = (int(rest[1]), int(rest[11]) + int(rest[12]))
-            # comm match alone is spoofable (exec -a kthreadd); the real
-            # kthreadd is the unique process with ppid 0 and that comm
-            if (
-                kthreadd is None
-                and head.endswith("(kthreadd")
-                and rest[1] == "0"
-            ):
-                kthreadd = pid
-        kids: dict[int, list[int]] = {}
-        for pid, (ppid, _) in procs.items():
-            kids.setdefault(ppid, []).append(pid)
-
-        def walk(root: int | None) -> dict[int, int]:
-            out: dict[int, int] = {}
-            stack = [] if root is None else [root]
-            while stack:
-                q = stack.pop()
-                if q in out or q not in procs:
-                    continue
-                out[q] = procs[q][1]
-                stack.extend(kids.get(q, []))
-            return out
-
-        return totals, walk(root_pid), walk(kthreadd)
-    except (OSError, ValueError, IndexError):
-        return None
-
-
-def _external_cpu_share(
-    before: tuple | None, after: tuple | None
-) -> float | None:
-    """Fraction of machine CPU time consumed by OTHER processes across
-    a measurement window. `before`/`after` are _cpu_probe() results —
-    (cpu_totals, our_tree_snapshot, kthread_snapshot) triples. This —
-    not the load average, which a
-    running bench inflates by itself — is what adjudicates whether a
-    trip-rate reading was externally contended (BASELINE.md rule,
-    rewritten r11). Our share is summed pid-by-pid: pids new in the
-    window count in full, and a pid whose jiffies DECREASED was reused
-    by a new in-tree process — its full (in-window) count is ours.
-    Process exits therefore can't poison the attribution. Kernel
-    threads (the kthreadd subtree — kworker flushes etc.) are excluded
-    from BOTH sides, because their CPU is largely INDUCED by our own
-    IO — counting it as external read a truly idle box at ~5%
-    'contention' during the IO-heavy trip window (see _cpu_probe)."""
-    if not before or not after or None in before or None in after:
-        return None
-    (tot0, idle0), ours0, kt0 = before
-    (tot1, idle1), ours1, kt1 = after
-    d_total = tot1 - tot0
-    if d_total <= 0:
-        return None
-    busy = d_total - (idle1 - idle0)
-
-    def _delta(s1: dict, s0: dict) -> int:
-        d = 0
-        for pid, j1 in s1.items():
-            j0 = s0.get(pid, 0)
-            d += j1 if j1 < j0 else j1 - j0
-        return d
-
-    external = max(0, busy - _delta(ours1, ours0) - _delta(kt1, kt0))
-    return round(external / d_total, 4)
-
-
-def _kthread_cpu_share(
-    before: tuple | None, after: tuple | None
-) -> float | None:
-    """Raw kthreadd-subtree share of the window's total jiffies.
-
-    _external_cpu_share excludes kernel threads from BOTH sides because
-    their CPU is largely induced by our own IO — but that also hides
-    kernel work induced by genuinely external processes (another
-    process's writeback flushes, ksoftirqd under external network
-    load), biasing the external share DOWNWARD right around the 0.05
-    adjudication threshold (ADVICE r11). Recording the raw kthread
-    delta alongside lets a borderline <0.05 reading with a LARGE
-    kernel-thread share be re-adjudicated manually instead of silently
-    passing."""
-    if not before or not after or None in before or None in after:
-        return None
-    (tot0, _), _, kt0 = before
-    (tot1, _), _, kt1 = after
-    d_total = tot1 - tot0
-    if d_total <= 0:
-        return None
-    d = 0
-    for pid, j1 in kt1.items():
-        j0 = kt0.get(pid, 0)
-        d += j1 if j1 < j0 else j1 - j0
-    return round(d / d_total, 4)
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    load1_start = _load1()
-    steal0 = _steal_probe()
+    # host readings (steal share, 1-min load) come from the benchmark's
+    # own probe, imported here so a bare `import bench` stays cheap
+    from perfbench.probes import CpuSample
+
+    run0 = CpuSample.now()
 
     from flink_template_spark import plans
     from flink_template_spark.session import get_spark, silence_bounded_window_warns
@@ -373,11 +191,10 @@ def main() -> None:
         # 3-sample band (VERDICT r10 next #3): the recorded rate is the
         # BEST of three timed runs, and all three per-sample rates are
         # recorded alongside the 1-min load average taken right before
-        # the samples — BASELINE.md's "<350k fully-warm = regression"
-        # clause is adjudicated against trip_load1, not narrative.
-        trip_load1 = _load1()
-        probe0 = _cpu_probe(os.getpid())
-        tsteal0 = _steal_probe()
+        # the samples and the steal share across them — BASELINE.md's
+        # trip-rate rule is adjudicated against those two, not narrative.
+        trip0 = CpuSample.now()
+        trip_load1 = round(trip0.load1, 2)
         trip_samples: list[float] = []
         for _ in range(3):
             timed = aggregate_trips(read_trip_events_json(spark, fx))
@@ -386,15 +203,10 @@ def main() -> None:
             w = time.perf_counter() - t0
             timed.input.unpersist(True)
             trip_samples.append(round(n_events / w, 1))
-        probe1 = _cpu_probe(os.getpid())
-        trip_ext_cpu = _external_cpu_share(probe0, probe1)
-        trip_kt_cpu = _kthread_cpu_share(probe0, probe1)
-        trip_steal = _steal_share(tsteal0, _steal_probe())
+        trip_steal = round(trip0.steal_share_until(CpuSample.now()), 4)
         trip_eps = max(trip_samples)
     except Exception as exc:
         trip_load1 = None
-        trip_ext_cpu = None
-        trip_kt_cpu = None
         trip_steal = None
         trip_samples = []
         errors["trip_pipeline"] = f"{type(exc).__name__}: {str(exc)[:300]}"
@@ -426,6 +238,7 @@ def main() -> None:
         sf_val = float(sf)
     except ValueError:
         sf_val = sf
+    run1 = CpuSample.now()
     # Full record -> sidecar file (auditable per-extended-query walls)
     # + stderr. Compact headline-only record -> stdout, sized to always
     # fit the driver's 2000-char tail capture (see module docstring).
@@ -439,12 +252,10 @@ def main() -> None:
         "trip_pipeline_events_per_sec": trip_eps,
         "trip_pipeline_samples": trip_samples,
         "trip_pipeline_load1": trip_load1,
-        "trip_pipeline_external_cpu_share": trip_ext_cpu,
-        "trip_pipeline_kthread_cpu_share": trip_kt_cpu,
         "trip_pipeline_steal_share": trip_steal,
-        "load1_start": load1_start,
-        "load1_end": _load1(),
-        "run_steal_share": _steal_share(steal0, _steal_probe()),
+        "load1_start": round(run0.load1, 2),
+        "load1_end": round(run1.load1, 2),
+        "run_steal_share": round(run0.steal_share_until(run1), 4),
         "sf": sf_val,
     }
     if errors:
@@ -463,24 +274,10 @@ def main() -> None:
             print(f"bench: could not write {sidecar}: {exc}", file=sys.stderr)
     print(json.dumps(full), file=sys.stderr)
 
-    headline = {
-        "metric": "headline_queries_total_wall",
-        "value": full["value"],
-        "unit": "sec",
-        "queries": timings,
-        "extended_total": full["extended_total"],
-        "extended_n": len(extended),
-        "trip_pipeline_events_per_sec": trip_eps,
-        "trip_pipeline_samples": trip_samples,
-        "trip_pipeline_load1": trip_load1,
-        "trip_pipeline_external_cpu_share": trip_ext_cpu,
-        "trip_pipeline_kthread_cpu_share": trip_kt_cpu,
-        "trip_pipeline_steal_share": trip_steal,
-        "load1_start": load1_start,
-        "load1_end": full["load1_end"],
-        "run_steal_share": full["run_steal_share"],
-        "sf": sf_val,
-    }
+    # stdout line = the full record minus the per-extended-query walls
+    # and error messages, which live in the sidecar
+    headline = {k: v for k, v in full.items() if k not in ("extended", "errors")}
+    headline["extended_n"] = len(extended)
     if errors:
         # names only: full messages live in the sidecar; stdout must stay
         # under the 2000-char tail no matter how many queries error.

@@ -1,135 +1,11 @@
 """Declared query library (SURVEY.md §2.7) + DuckDB oracle SQL.
 
 Importing this package registers every query module into
-``flink_template_spark.plans.registry``; ``QUERIES``/``ORACLES`` are then
-re-exposed in an explicit priority order.
-
-Why the reorder: the grading driver verifies the FIRST 50 registered
-queries per round (CORRECTNESS_r01 covered exactly the first 50 in import
-order, leaving 87 queries without a driver verdict). The priority list
-rotates per round so every family accumulates driver-checked entries:
-
-- round 2 front-loaded (a) the 20 queries that errored in round 1 on the
-  events-loader bug and (b) the 30 core LLM-training-data-pipeline
-  queries; 45/50 came back green, 5 red on oracle dtype/array
-  harness-compat defects (fixed at round-3 start);
-- round 3 front-loaded the never-checked subqueries (16) + functions_ext
-  (17) families plus latent-dtype/array-fix proofs; 47/50 green, 0 wrong
-  answers, 3 ``no_oracle`` (the engine-internal approx sketches — a
-  slate-planning mistake, not a correctness one);
-- round 4 promoted EVERY remaining never-checked query plus the new
-  q_ann_index_build and 12 regression picks; 50/50 green. The three
-  queries that structurally CANNOT go green (engine-internal sketch
-  registers -> no oracle; their oracle-exact portable duals carry the
-  sketch verdict) are pinned to the permanent tail (_NO_ORACLE_TAIL)
-  and must never re-enter a 50-slot slate;
-- round 5 was pure regression assurance (VERDICT r4 next #1): slate =
-  the 40 STALEST greens oldest-first + 10 round-4-rebuilt regression
-  picks; came back 50/50 green;
-- round 6 fronted the 23 round-5 additions + the 27 oldest stale
-  greens (the round-2 cohort); came back 50/50 green — every query the
-  driver has ever checked is green at its latest check;
-- round 7 (this slate, VERDICT r6 next #2): front the 27 round-6
-  additions that have never received a driver verdict
-  (drift/eval/valuation audits, corpus line dedup, containment join,
-  phrase search, label propagation, Hellinger matrix, fingerprints,
-  samplers — all oracle-green in-session at up to 3 SFs) + the 23
-  oldest stale greens (the 4 r2-cohort leftovers, then the r3 cohort
-  oldest-first). _MIDDLE holds the staleness ledger for round 8:
-  FIRST the 21 round-7 additions (never driver-checked; every one
-  oracle-green in-session at ALL THREE SFs — CDC chunk dedup,
-  collocation lift, vocab coverage, MRR, zone maps, MMR, LSH recall
-  audit, Gini, shuffle-skew audit, k-anonymity, seasonal residuals,
-  FD audit, data expectations, snapshot diff, Benford, spatial radius
-  join, interval coverage, term drift, TWAP, change-point, A/B readout), THEN the 20 r3-cohort
-  names that did not fit this slate — after a green r7 those 20 are
-  the only queries whose last driver verdict predates round 4, so a
-  50-slot r8 slate (21 + 20 + 9 oldest r4) clears the census
-  entirely. The one rows-only r7 addition (q_multimodal_real_decode —
-  no SQL engine parses WAV/PPM) is pinned to _NO_ORACLE_TAIL;
-- round 8 (VERDICT r7 next #1): exactly the ledgered
-  21 round-7 additions (never driver-checked; all oracle-green
-  in-session at all three SFs) + the 20 r3-cohort names (the only
-  queries whose last driver verdict predates round 4) + the 9
-  oldest round-4 greens (q_vector_norms … q_embedding_quantize_int8,
-  in their r4 check order). A green r8 leaves staleness bounded by
-  round 4 (31 r4-cohort names remain, ledgered in _MIDDLE) and every
-  r5+ verdict no more than four rounds old. New round-8 queries are
-  prepended to _MIDDLE as they land, never driver-checked, first in
-  line for round 9. Round 8 landed 20 such additions (Markov, RFM,
-  basket pairs, skyline, l-diversity, dedup-rate-by-source,
-  edit-distance pairs, Kneser-Ney, n-gram lang-ID, volume ACF, chi²
-  terms, weighted median, cohort LTV, revenue concentration, event
-  paths, funnel latency, forecast baselines, trimmed mean, activity
-  heatmap, volume percentile bands — all oracle-green at all three
-  SFs locally), so _MIDDLE held 20 + 31 = 51 entries and the natural
-  round-9 slate was its first 50 — clearing never-checked and leaving
-  exactly ONE r4 name (q_grouping_sets) for the r10 slate;
-- round 9 (VERDICT r8 next #1): exactly that pre-ledgered
-  set — the 20 round-8 additions (never driver-checked; all
-  oracle-green in-session at all three SFs) + the 30 oldest r4-cohort
-  greens in their r4 check order. A green r9 leaves q_grouping_sets as
-  the single query whose last driver verdict predates round 5; the
-  next-stalest cohort is round 5's 50 (ledgered in _MIDDLE behind any
-  new round-9 additions), so the natural r10 slate is q_grouping_sets
-  + the r9 additions + the oldest r5 names. Round 9 landed 41 new
-  queries (21 pre-compaction: bounce rate … order streaks; then the
-  session waves: Kaplan-Meier, target encoding, assoc rules, Gini
-  split, Cramér's V, PSI, join-cardinality audit, Bloom FPR audit,
-  DBSCAN, source lang entropy, Mann-Whitney, Zipf fit, conformal
-  coverage, assortativity, NDCG, 3-itemsets, power analysis,
-  skip-grams, price elasticity, Spearman — all oracle-green at all
-  three SFs locally), so _MIDDLE's head holds 41 never-checked names
-  + q_grouping_sets: the natural round-10 slate is its first 50
-  (leaving the 50-query r5 cohort as the stalest verdicts for r11).
-  Round 9 came back 50/50 green (CORRECTNESS_r09);
-- round 10 (this slate, VERDICT r9 next #1): exactly the pre-ledgered
-  set — the 41 round-9 additions (never driver-checked; all
-  oracle-green in-session at all three SFs) + q_grouping_sets (the
-  single query whose last driver verdict predates round 5) + the 8
-  oldest round-5-cohort greens in their r5 check order. A green r10
-  clears never-checked entirely and bounds staleness at round 5 (the
-  42 remaining r5-cohort names, ledgered in _MIDDLE behind any new
-  round-10 additions, are the natural core of the r11 slate). Round 10
-  landed 9 additions (two-feature OLS, winsorized stats, Welch t-test,
-  Naive-Bayes lang classifier, JS divergence, mixture weights, CUPED,
-  exact Kendall tau-b, mutual information — all oracle-green at all
-  three SFs locally), so the natural r11 slate is those 9 + the first
-  41 r5-cohort names, leaving 1 r5 name + the r6 cohort for r12.
-  Round 10 came back 50/50 green (CORRECTNESS_r10);
-- round 11 (this slate, VERDICT r10 next #1): exactly the pre-ledgered
-  set — the 9 round-10 additions (never driver-checked; judge-verified
-  green against an independent DuckDB harness in the r10 verdict, and
-  oracle-green locally at all three SFs) + the 41 oldest
-  round-5-cohort greens in their r5 check order
-  (q_topk_orders_per_segment … q_bpe_merges). A green r11 keeps
-  never-checked empty (modulo any round-11 additions, prepended to
-  _MIDDLE as they land) and bounds staleness at round 5's single
-  leftover (q_trip_summary) + the round-6 cohort — _MIDDLE ledgers
-  exactly those 51 names in check order, so the natural r12 slate is
-  any r11 additions + q_trip_summary + the oldest r6 names. Round 11
-  landed 9 additions (one-way ANOVA, Grubbs outlier, blocklist gate
-  rates, McNemar paired gates, BH-FDR over term tests, PCA power
-  iteration, graph modularity, calibration+Brier+ECE, isotonic
-  calibration via the PAV minimax identity — all oracle-green at all
-  three SFs locally, each with a brute recount test), prepended to
-  _MIDDLE: the natural r12 slate is those 9 + q_trip_summary + the 40
-  oldest r6 names, leaving 10 r6 names for r13.
-- round 12 (this slate, VERDICT r11 next #1): exactly the pre-ledgered
-  set — the 9 round-11 additions (never driver-checked; judge-verified
-  green in the r11 verdict, oracle-green locally at all three SFs) +
-  q_trip_summary (the single round-5 leftover) + the 40 oldest
-  round-6-cohort greens in their r6 check order. A green r12 clears
-  never-checked (modulo round-12 additions, prepended to _MIDDLE as
-  they land) and bounds staleness at the 10 remaining r6 names + the
-  r7 cohort — _MIDDLE ledgers the natural r13 slate. Round 12 landed
-  10 additions (Cohen's kappa/phi gate agreement, precision/recall/F1
-  threshold sweep, clipped log-loss, confident-learning label-noise
-  candidates, Levene variance homogeneity, exact tie-corrected global
-  AUC+Gini, Theil's U both directions, MinHash-vs-exact-Jaccard sketch
-  error audit, Hilbert-curve layout, s16le raw-PCM audio features —
-  each with a brute recount test), so the natural r13 slate is those
-  10 + the 10 r6 leftovers + the 30 oldest r7 names.
+``flink_template_spark.plans.registry`` and re-exposes ``QUERIES`` and
+``ORACLES`` in one derived order: registration order, with the queries
+that have no oracle (engine-internal approx sketches, container decoders)
+moved last. Any prefix of ``QUERIES`` a verifier checks therefore holds
+only oracled queries.
 """
 
 from flink_template_spark.plans import registry  # noqa: F401
@@ -149,202 +25,8 @@ from flink_template_spark.plans import quality  # noqa: F401
 from flink_template_spark.plans import safety  # noqa: F401
 from flink_template_spark.plans import graph  # noqa: F401
 
-# First 50 = this round's driver-check slate (see module docstring).
-_PRIORITY = [
-    # -- the 9 round-11 additions: never driver-checked before this
-    #    round (VERDICT r11 next #1; judge-verified green in r11) --
-    "q_graph_modularity",
-    "q_calibration_brier",
-    "q_isotonic_calibration",
-    "q_anova_oneway",
-    "q_grubbs_outlier",
-    "q_blocklist_gate_rates",
-    "q_mcnemar_gates",
-    "q_bh_fdr_terms",
-    "q_pca_power_iteration",
-    # -- the round-5-cohort leftover: last driver verdict round 5 --
-    "q_trip_summary",
-    # -- the 40 oldest round-6-cohort greens (r6 check order): their
-    #    last driver verdict is round 6 --
-    "q_jaccard_prefix_pairs",
-    "q_pagerank_trade",
-    "q_triangle_participation",
-    "q_random_projection",
-    "q_rendezvous_shards",
-    "q_winnowing_fingerprints",
-    "q_priority_sample",
-    "q_knn_join_gemm",
-    "q_kmv_set_ops",
-    "q_kcore_trade",
-    "q_zorder_layout",
-    "q_ewma_value",
-    "q_sorted_neighborhood_pairs",
-    "q_trustrank_trade",
-    "q_trade_hops",
-    "q_curriculum_order",
-    "q_robust_outlier_fence",
-    "q_bigram_logprob",
-    "q_token_entropy",
-    "q_coreset_greedy",
-    "q_quantile_normalize",
-    "q_table_stats",
-    "q_leakage_safe_split",
-    "q_best_of_cluster",
-    "q_bm25_search",
-    "q_contamination_check",
-    "q_cosine_topk",
-    "q_dedup_events_keep_first",
-    "q_doc_chunks",
-    "q_doc_fingerprints",
-    "q_event_transitions",
-    "q_events_exact_moments",
-    "q_events_sliding_2d_1d",
-    "q_events_tumbling_daily",
-    "q_fuzzy_name_pairs",
-    "q_gapfill_interpolate",
-    "q_json_get",
-    "q_lang_guess_confusion",
-    "q_mixture_rebalance",
-    "q_multimodal_byte_histogram",
-]
 
-# Immediately after the slate, in case the driver checks more than 50:
-# the staleness ledger for round 13. FIRST the round-12 additions
-# (prepended here as they land, never driver-checked), THEN the 10
-# round-6-cohort names the r12 slate could not fit, THEN the oldest
-# round-7-cohort names in their r7 check order — after a green r12
-# these are the stalest driver verdicts; the natural r13 slate is this
-# list's first 50.
-_MIDDLE: list[str] = [
-    # round-12 additions: never driver-checked (oracle-green locally
-    # at all three SFs) — first in line for the round-13 slate
-    "q_cohens_kappa_gates",
-    "q_pr_curve_nb",
-    "q_logloss_nb",
-    "q_label_noise_candidates",
-    "q_levene_variance",
-    "q_auc_nb_gate",
-    "q_theils_u_lang_source",
-    "q_minhash_jaccard_err",
-    "q_hilbert_layout",
-    "q_audio_pcm_features",
-    # r6-cohort leftovers (stalest verdicts after a green r12)
-    "q_multimodal_frame_sample",
-    "q_multimodal_resize",
-    "q_ngram_jaccard_pairs",
-    "q_ngram_novelty",
-    "q_quality_scores",
-    "q_range_frame_rolling_7d",
-    "q_repetition_metrics",
-    "q_resample_daily_expr",
-    "q_resample_daily_ffill",
-    "q_retention_cohorts",
-    # r7 cohort, in r7 check order
-    "q_hits_trade",
-    "q_dsir_weights",
-    "q_binary_embedding_topk",
-    "q_bootstrap_ci",
-    "q_stupid_backoff",
-    "q_recursive_chain_rollup",
-    "q_ks_source_drift",
-    "q_line_dedup_corpus",
-    "q_containment_pairs",
-    "q_ann_recall_eval",
-    "q_auc_lang_confound",
-    "q_knn_shapley",
-    "q_davies_bouldin",
-    "q_systematic_resample",
-    "q_length_bucket_efficiency",
-    "q_matryoshka_overlap",
-    "q_split_fingerprint_leakage",
-    "q_phrase_search",
-    "q_labelprop_communities",
-    "q_time_decay_sample",
-    "q_hellinger_affinity_matrix",
-    "q_content_fingerprint",
-    "q_embedding_drift",
-    "q_gate_rates_wilson",
-    "q_event_burstiness",
-    "q_event_correlation_matrix",
-    "q_theil_sen_trend",
-    "q_simhash_hamming_pairs",
-    "q_text_stats_by_lang",
-    "q_tfidf_top_terms",
-    "q_vocab_build",
-    "q2_min_price_parts",
-    "q4_exists_late_ship",
-    "q8_market_share",
-    "q9_profit_by_nation_year",
-]
-
-# Queries that structurally CANNOT receive a driver hash verdict:
-# Spark's approx sketches keep engine-internal register state (HLL++/
-# KLL), so no cross-engine oracle exists (documented at
-# functions_ext.py's approx entries). Their oracle-exact portable duals
-# (q_hll_portable_rollup / q_cms_token_freq / q_ddsketch_quantiles)
-# carry the sketch verdict. Pinned LAST in the export order so they can
-# never burn a 50-slot slate position again (VERDICT r3 What's-wrong #1).
-_NO_ORACLE_TAIL = [
-    "q_approx_distinct_users",
-    "q_approx_percentile_value",
-    "q_hll_mergeable_rollup",
-    # no SQL engine parses WAV/PPM containers; the codecs are
-    # closed-form pinned in tests/test_codecs.py instead
-    "q_multimodal_real_decode",
-]
-
-# Tail = families already driver-green in rounds 1-2 (regression pool);
-# "safety" leads it so the round-3 additions sit with the round-4
-# promotion set rather than behind the long-green relational tail.
-_TAIL_FAMILIES = [
-    "safety",
-    "events_time",
-    "telemetry",
-    "text_dedup",
-    "quality",
-    "multimodal",
-    "vectors",
-    "datapipe",
-    "subqueries",
-    "functions_ext",
-    "variant",
-    "trip_pipeline",
-    "relational",
-    "windows_analytic",
-]
-
-
-def _ordered_names() -> list[str]:
-    # Degrade gracefully on a stale priority name (renamed/removed query):
-    # warn and drop it rather than failing package import.
-    priority = []
-    for name in _PRIORITY + _MIDDLE:
-        if name in registry.QUERIES:
-            priority.append(name)
-        else:
-            import warnings
-
-            warnings.warn(
-                f"verification-slate name {name!r} is not a registered "
-                "query; dropping it from the order",
-                stacklevel=2,
-            )
-    seen = set(priority)
-    order = list(priority)
-    fam_rank = {m: i for i, m in enumerate(_TAIL_FAMILIES)}
-    rest = [n for n in registry.QUERIES if n not in seen]
-    # the no-oracle approx queries sort after EVERYTHING else — they can
-    # never re-enter a fixed-size verification slate
-    rest.sort(
-        key=lambda n: (
-            n in _NO_ORACLE_TAIL,
-            fam_rank.get(registry.QUERIES[n].__module__.rsplit(".", 1)[-1], 99),
-        )
-    )
-    order.extend(rest)
-    return order
-
-
-_ORDER = _ordered_names()
+# stable sort: registration order kept, oracle-less queries last
+_ORDER = sorted(registry.QUERIES, key=lambda n: n not in registry.ORACLES)
 QUERIES = {n: registry.QUERIES[n] for n in _ORDER}
 ORACLES = {n: registry.ORACLES[n] for n in _ORDER if n in registry.ORACLES}

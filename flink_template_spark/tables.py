@@ -43,7 +43,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     The cache dict lives ON the session object, so its lifetime is
     exactly the session's (a stopped session's relations die with it,
     a fresh session re-lists the files — important for tests that
-    rebuild sessions)."""
+    rebuild sessions).
+
+    Staleness contract: each table's file listing and schema are pinned
+    at its first read for the rest of the session's life. Files added,
+    replaced or removed under ``sf_dir`` afterwards are not seen (a
+    removed file fails the next scan); a harness that rewrites data
+    under ``sf_dir`` must start a new session."""
     try:
         cache = spark._flink_template_table_cache  # type: ignore[attr-defined]
     except AttributeError:

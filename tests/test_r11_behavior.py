@@ -61,48 +61,6 @@ def test_triplet_query_uses_derived_centroid_count(spark, sf_dir):
     assert df.columns == ["anchor", "positive", "negative", "cos_ap", "cos_an"]
 
 
-def test_bench_external_cpu_share():
-    """The trip-rate adjudicator (BASELINE.md r11 rule): CPU burned by
-    our own process tree must NOT count as external contention, and the
-    helper must degrade to None on degenerate windows."""
-    import os
-    import time
-
-    import bench
-
-    me = os.getpid()
-    before = bench._cpu_probe(me)
-    t0 = time.time()
-    x = 0
-    while time.time() - t0 < 0.5:  # in-tree CPU burn
-        x += sum(i * i for i in range(1000))
-    after = bench._cpu_probe(me)
-    share = bench._external_cpu_share(before, after)
-    # live probe: only the envelope is asserted (a loaded box can
-    # legitimately read any external share — no flaky threshold)
-    assert share is not None and 0.0 <= share <= 1.0
-    assert bench._external_cpu_share(None, after) is None
-    assert bench._external_cpu_share(before, before) is None
-    # attribution logic pinned on SYNTHETIC windows (deterministic):
-    # 100-jiffy window, 80 busy; our tree burned 50, kthreads 10
-    kt_b, kt_a = {2: 5}, {2: 15}
-    b = ((1000, 900), {10: 100, 11: 40}, kt_b)
-    a = ((1100, 920), {10: 130, 11: 60}, kt_a)
-    assert bench._external_cpu_share(b, a) == round((80 - 50 - 10) / 100, 4)
-    # a long-lived worker EXITING mid-window must not poison ours:
-    # pid 11 (40 jiffies of history) vanishes; pid 12 starts in-window
-    a2 = ((1100, 920), {10: 130, 12: 15}, kt_a)
-    assert bench._external_cpu_share(b, a2) == round(
-        (80 - 30 - 15 - 10) / 100, 4
-    )
-    # pid-reuse guard: a reused pid (jiffies DECREASED) is a new
-    # in-tree process — its full in-window count is ours
-    a3 = ((1100, 920), {10: 130, 11: 5}, kt_a)
-    assert bench._external_cpu_share(b, a3) == round(
-        (80 - 30 - 5 - 10) / 100, 4
-    )
-
-
 def test_bench_import_is_lazy():
     """Importing bench must not import the plans registry (ADVICE r10:
     an import-time failure in one plans module would otherwise kill the

@@ -8,9 +8,6 @@
    embedding row must be EXCLUDED in both engines, not silently poison
    the per-dimension sums with NULLs (Spark zip_with pad) or read out
    of range (DuckDB v[i]).
-3. bench._kthread_cpu_share (ADVICE r11): the raw kernel-thread share
-   recorded alongside the external share so borderline <0.05 readings
-   with large kernel burn can be re-adjudicated manually.
 """
 
 from __future__ import annotations
@@ -142,22 +139,6 @@ def test_nb_scores_tokenless_docs_prior_only(spark, tmp_path):
             plans.QUERIES[name](spark, d), con, plans.ORACLES[name]
         )
         assert ok, (name, msg)
-
-
-def test_bench_kthread_cpu_share():
-    import bench
-
-    kt_b, kt_a = {2: 5, 3: 0}, {2: 15, 3: 20}
-    b = ((1000, 900), {10: 100}, kt_b)
-    a = ((1100, 920), {10: 130}, kt_a)
-    # 100-jiffy window; kthreads burned (15-5) + (20-0) = 30
-    assert bench._kthread_cpu_share(b, a) == 0.3
-    # a reused kthread pid (jiffies decreased) counts its full in-window burn
-    a2 = ((1100, 920), {10: 130}, {2: 3, 3: 20})
-    assert bench._kthread_cpu_share(b, a2) == round((3 + 20) / 100, 4)
-    # degenerate windows → None
-    assert bench._kthread_cpu_share(None, a) is None
-    assert bench._kthread_cpu_share(b, b) is None
 
 
 def test_r12_plan_pins(spark, sf_dir):

@@ -669,20 +669,16 @@ def test_ann_index_fused_build_matches_joined_build(spark, sf_dir):
 
 
 def test_bench_steal_share_synthetic():
-    """bench._steal_share: hypervisor steal attribution (r12 opt round —
-    host contention is invisible to the external-CPU and kthread
-    probes; see bench._steal_probe docstring). Synthetic cases follow
-    the _external_cpu_share / _kthread_cpu_share pin convention."""
-    import bench
+    """The steal share bench.py records (perfbench.probes.CpuSample):
+    hypervisor steal over a window's total jiffies, 0.0 on a window with
+    no elapsed time."""
+    from perfbench.probes import CpuSample
 
-    assert bench._steal_share((1000, 10), (2000, 110)) == 0.1
-    assert bench._steal_share((1000, 10), (2000, 10)) == 0.0
-    # degenerate: missing probe or no elapsed jiffies -> None
-    assert bench._steal_share(None, (2000, 10)) is None
-    assert bench._steal_share((1000, 10), None) is None
-    assert bench._steal_share((1000, 10), (1000, 10)) is None
-    # parse shape: _steal_probe returns (total, steal) ints on Linux
-    p = bench._steal_probe()
-    assert p is None or (
-        isinstance(p[0], int) and isinstance(p[1], int) and p[0] >= p[1] >= 0
-    )
+    before = CpuSample(1000, 10, 0.0)
+    assert before.steal_share_until(CpuSample(2000, 110, 0.0)) == 0.1
+    assert before.steal_share_until(CpuSample(2000, 10, 0.0)) == 0.0
+    assert before.steal_share_until(CpuSample(1000, 10, 0.0)) == 0.0
+    # live read: integer jiffies from /proc/stat plus the 1-min load
+    p = CpuSample.now()
+    assert isinstance(p.total, int) and isinstance(p.steal, int)
+    assert p.total >= p.steal >= 0 and p.load1 >= 0.0

@@ -1,89 +1,25 @@
-"""Registry-order invariants: the first 50 exported queries are the
-per-round driver-check slate (plans/__init__ docstring) — pin its
-composition so an innocent registration change can't silently evict a
-flagship from verification."""
+"""Registry-order invariants: ``plans.QUERIES`` is registration order with
+the oracle-less queries moved last (plans/__init__ docstring), so any
+prefix a verifier checks holds only oracled queries."""
 
 from __future__ import annotations
 
 from flink_template_spark import plans
 
 
-def test_priority_slate_shape():
-    names = list(plans.QUERIES)
-    assert len(names) == len(set(names))
-    first50 = set(names[:50])
-    # round-12 rotation (VERDICT r11 next #1): ALL 9 round-11 additions
-    # (never driver-checked before this round)
-    for q in (
-        "q_graph_modularity",
-        "q_calibration_brier",
-        "q_isotonic_calibration",
-        "q_anova_oneway",
-        "q_grubbs_outlier",
-        "q_blocklist_gate_rates",
-        "q_mcnemar_gates",
-        "q_bh_fdr_terms",
-        "q_pca_power_iteration",
-    ):
-        assert q in first50, q
-    # the round-5 leftover (its last driver verdict is round 5)
-    assert "q_trip_summary" in first50
-    # representatives of the 40 oldest r6-cohort greens (their last
-    # driver verdict is round 6)
-    for q in (
-        "q_jaccard_prefix_pairs",
-        "q_pagerank_trade",
-        "q_knn_join_gemm",
-        "q_zorder_layout",
-        "q_coreset_greedy",
-        "q_bm25_search",
-        "q_cosine_topk",
-        "q_multimodal_byte_histogram",
-    ):
-        assert q in first50, q
-    # the round-12 additions sit at the HEAD of _MIDDLE: first in line
-    # for the round-13 slate, never inside this round's 50
-    for q in (
-        "q_cohens_kappa_gates",
-        "q_pr_curve_nb",
-        "q_logloss_nb",
-        "q_label_noise_candidates",
-        "q_levene_variance",
-    ):
-        assert q not in first50 and names.index(q) < 60, q
-
-
 def test_slate_has_no_oracle_less_queries():
-    """VERDICT r3 What's-wrong #1: never slate a query that structurally
-    cannot go green. Every slate entry must have an oracle, and the
-    no-oracle approx queries must be pinned at the very end of the
-    export order."""
+    """Never put a query that structurally cannot go green ahead of one
+    that can: the oracle-less names are exactly the tail of the export
+    order, and the first 50 all have oracles."""
     names = list(plans.QUERIES)
-    first50 = names[:50]
-    for q in first50:
+    no_oracle = [q for q in names if q not in plans.ORACLES]
+    assert no_oracle and names[-len(no_oracle):] == no_oracle
+    for q in names[:50]:
         assert q in plans.ORACLES, f"slate entry {q} has no oracle"
-    assert set(names[-len(plans._NO_ORACLE_TAIL):]) == set(
-        plans._NO_ORACLE_TAIL
-    )
-
-
-def test_slate_names_all_registered_strict():
-    """ADVICE r3: _ordered_names degrades unknown slate names to a
-    warning at runtime (import must never fail), so a typo in
-    _PRIORITY/_MIDDLE/_NO_ORACLE_TAIL must fail HERE instead of
-    silently reordering the verification slate."""
-    from flink_template_spark.plans import registry
-
-    for name in plans._PRIORITY + plans._MIDDLE + plans._NO_ORACLE_TAIL:
-        assert name in registry.QUERIES, f"slate name {name!r} not registered"
-    # the slate must also be duplicate-free so it fills exactly 50 slots
-    slate = plans._PRIORITY
-    assert len(slate) == len(set(slate)) == 50
 
 
 def test_every_priority_name_exists():
-    # _ordered_names warns-and-drops unknown names; the exported dicts
-    # must still agree with the registry
+    # the derived order must cover the registry exactly
     from flink_template_spark.plans import registry
 
     assert set(plans.QUERIES) == set(registry.QUERIES)
@@ -93,20 +29,3 @@ def test_every_priority_name_exists():
 def test_oracle_queries_all_registered():
     for name in plans.ORACLES:
         assert name in plans.QUERIES
-
-
-def test_stale_priority_name_warns_not_raises(monkeypatch):
-    """A renamed/removed query in the slate must degrade to a warning
-    and be dropped from the order — never fail package import."""
-    import warnings
-
-    monkeypatch.setattr(
-        plans, "_PRIORITY", plans._PRIORITY[:3] + ["q_DOES_NOT_EXIST"]
-    )
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        order = plans._ordered_names()
-    assert "q_DOES_NOT_EXIST" not in order
-    assert any("q_DOES_NOT_EXIST" in str(x.message) for x in w)
-    # everything real is still present exactly once
-    assert len(order) == len(set(order)) == len(plans.QUERIES)
