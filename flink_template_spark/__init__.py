@@ -18,4 +18,10 @@ aggregator; see SURVEY.md) as an idiomatic Spark engine:
                    (reference: jdbc/JDBCOutputFormat.kt etc.).
 """
 
+from flink_template_spark import _zipimport_compat
+
 __version__ = "0.1.0"
+
+# every Python worker that unpickles an engine function imports this
+# package, so its later tasks skip the per-task zip directory re-reads
+_zipimport_compat.install()

@@ -102,12 +102,19 @@ def _codes_arrow(codebooks: "list[Codebook]", vec_col: str):
     as 0 where the HOF fold yields NULL — same NaN↔NULL boundary the
     cosine kernels document; the curated embedding tables carry no
     NULL elements. Ragged batches fall off the vectorized path onto
-    the exact per-row loop."""
+    the exact per-row loop.
+
+    The codebooks must be finite (ValueError otherwise): a NaN code
+    entry would make only SOME of a subspace's k distances NaN, where
+    np.argmin, the per-row loop's strict < and array_min would each
+    pick a different code."""
     import numpy as _np
 
     from pyspark.sql.functions import pandas_udf
 
     cbs = _np.array(codebooks, dtype=_np.float64)  # m × k × d
+    if not _np.isfinite(cbs).all():
+        raise ValueError("PQ codebooks must be finite (found NaN or Inf)")
     m, k, d = cbs.shape
 
     def _row_codes(row) -> list:

@@ -158,7 +158,9 @@ def ivf_assign(
     pair rows AND the window's full id-partitioned Exchange+Sort are
     gone; the assignment is a pure projection over the corpus scan."""
     c_rows = (
-        centroids.filter(valid_vec(F.col(vec_col)))
+        # a NULL-id centroid could never be named as a cluster; dropping
+        # it here also keeps the Python sort below total
+        centroids.filter(valid_vec(F.col(vec_col)) & F.col(centroid_id).isNotNull())
         .select(centroid_id, vec_col)
         .collect()
     )

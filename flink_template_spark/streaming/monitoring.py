@@ -5,7 +5,8 @@ derived health readouts (throughput, state growth, observed metrics).
 This is the driver-side complement to ``observe.observe_stream``:
 ``observe`` computes IN-FLIGHT counters inside the job; the listener
 captures what the ENGINE reports about each batch — input rows,
-processed rows/second, batch duration, state-store rows/bytes, and any
+processed rows/second, batch duration and its addBatch phase,
+state-store rows/bytes, and any
 ``observedMetrics`` — the numbers a 100 TB deployment ships to its
 metrics system (the reference has no equivalent; its "monitoring" is a
 debug log in the hot path, TripAggregatorApplication.kt:67).
@@ -61,6 +62,7 @@ class ProgressRecorder(StreamingQueryListener):
 
     def onQueryProgress(self, event) -> None:
         p = json.loads(event.progress.json)
+        durations = p.get("durationMs") or {}
         rec = {
             "query_id": p.get("id"),
             "name": p.get("name"),
@@ -68,7 +70,10 @@ class ProgressRecorder(StreamingQueryListener):
             "num_input_rows": p.get("numInputRows", 0),
             "input_rows_per_sec": p.get("inputRowsPerSecond"),
             "processed_rows_per_sec": p.get("processedRowsPerSecond"),
-            "batch_duration_ms": (p.get("durationMs") or {}).get("triggerExecution"),
+            "batch_duration_ms": durations.get("triggerExecution"),
+            # the phase that runs the batch's plan into the sink; for the
+            # trip stream, the stateful operator and its Python UDF
+            "add_batch_ms": durations.get("addBatch"),
             # state-store growth: the number a stateful operator's
             # watermark/TTL design is judged by
             "state_rows": sum(

@@ -16,8 +16,11 @@ runs over deterministic fixtures, one untimed warm run per stream
 (schema + codegen warm-up), then best-of-N timed runs with fresh
 checkpoints/output roots per run (state directories must not be reused
 — a second ingest_dedup run against a grown corpus would measure
-different work). Prints ONE JSON line:
-  {"streams": {name: events_per_sec, ...}, "samples": {...}, ...}
+different work). A ``ProgressRecorder`` listens during the timed runs,
+so each stream's record also carries its micro-batches per run, the
+median batch time and the peak state-store rows. Prints ONE JSON line:
+  {"streams": {name: events_per_sec, ...}, "samples": {...},
+   "progress": {name: {"batches", "batch_ms_p50", "max_state_rows"}}, ...}
 and appends nothing to bench.py's record (side-harness by design —
 bench.py's stdout contract stays byte-compatible).
 """
@@ -27,6 +30,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -34,11 +38,39 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 RUNS = 3
+# how long to wait for the listener bus to deliver a run's last progress
+PROGRESS_WAIT_S = 30
+
+
+def progress_of(recorder, queries) -> dict:
+    """Batches per run, median batch ms and peak state rows over the
+    given finished queries, read from ``recorder``'s ledger. Listener
+    events arrive asynchronously, so wait (bounded) until each query's
+    last batch is in the ledger."""
+    from flink_template_spark.streaming.monitoring import totals_of
+
+    want = {str(q.id): q.lastProgress["batchId"] for q in queries if q.lastProgress}
+    deadline = time.monotonic() + PROGRESS_WAIT_S
+    while True:
+        recs = [r for r in recorder.records if r["query_id"] in want]
+        seen = {(r["query_id"], r["batch_id"]) for r in recs}
+        if set(want.items()) <= seen or time.monotonic() > deadline:
+            break
+        time.sleep(0.1)
+    if not recs:
+        return {}
+    per_run = [totals_of([r for r in recs if r["query_id"] == qid]) for qid in want]
+    return {
+        "batches": statistics.median_low(t["n_batches"] for t in per_run),
+        "batch_ms_p50": statistics.median(r["batch_duration_ms"] or 0 for r in recs),
+        "max_state_rows": max(t["max_state_rows"] for t in per_run),
+    }
 
 
 def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     from flink_template_spark.session import get_spark, silence_bounded_window_warns
+    from flink_template_spark.streaming.monitoring import ProgressRecorder
 
     spark = get_spark(
         app_name="bench_streaming",
@@ -50,21 +82,28 @@ def main() -> None:
     work = tempfile.mkdtemp(prefix="bench_streaming_")
     results: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
+    progress: dict[str, dict] = {}
     errors: dict[str, str] = {}
 
     def record(name, n_events, run_once):
-        """One warm run + RUNS timed runs; keep the best rate."""
+        """One warm run + RUNS timed runs; keep the best rate. Each
+        ``run_once`` returns its finished query."""
+        recorder = ProgressRecorder()
         try:
             run_once("warm")
-            rates = []
+            spark.streams.addListener(recorder)
+            rates, queries = [], []
             for i in range(RUNS):
                 t0 = time.perf_counter()
-                run_once(f"t{i}")
+                queries.append(run_once(f"t{i}"))
                 rates.append(round(n_events / (time.perf_counter() - t0), 1))
             samples[name] = rates
             results[name] = max(rates)
+            progress[name] = progress_of(recorder, queries)
         except Exception as exc:  # isolate per stream
             errors[name] = f"{type(exc).__name__}: {str(exc)[:300]}"
+        finally:
+            spark.streams.removeListener(recorder)
 
     # ---- trip_sessions: keyed GroupState sessionization ------------------
     # Measured through the EVENT-TIME dual (sessionize_trips_event_time):
@@ -87,7 +126,7 @@ def main() -> None:
         trips_dir, n_trips=4000, events_per_trip=50, n_shards=cpus
     )
 
-    def run_trip(tag: str) -> None:
+    def run_trip(tag: str):
         ckpt = os.path.join(work, f"trip_ckpt_{tag}")
         q = (
             sessionize_trips_event_time(read_trip_events_stream(spark, trips_dir))
@@ -101,6 +140,7 @@ def main() -> None:
             q.stop()
             raise TimeoutError("trip_sessions availableNow exceeded 600s")
         shutil.rmtree(ckpt, ignore_errors=True)
+        return q
 
     record("trip_sessions", n_trip_events, run_trip)
 
@@ -130,7 +170,7 @@ def main() -> None:
         ]
     )
 
-    def run_ingest(tag: str) -> None:
+    def run_ingest(tag: str):
         root = os.path.join(work, f"corpus_{tag}")
         ckpt = os.path.join(work, f"ingest_ckpt_{tag}")
         stream = spark.readStream.schema(doc_schema).json(docs_dir)
@@ -140,6 +180,7 @@ def main() -> None:
             raise TimeoutError("ingest_dedup availableNow exceeded 600s")
         shutil.rmtree(root, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
+        return q
 
     record("ingest_dedup", n_docs, run_ingest)
 
@@ -176,7 +217,7 @@ def main() -> None:
         ]
     )
 
-    def run_kmv(tag: str) -> None:
+    def run_kmv(tag: str):
         sk = os.path.join(work, f"kmv_out_{tag}")
         ckpt = os.path.join(work, f"kmv_ckpt_{tag}")
         stream = spark.readStream.schema(ev_schema).json(ev_dir)
@@ -186,6 +227,7 @@ def main() -> None:
             raise TimeoutError("kmv_stream availableNow exceeded 600s")
         shutil.rmtree(sk, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
+        return q
 
     record("kmv_stream", n_kmv_events, run_kmv)
 
@@ -194,6 +236,7 @@ def main() -> None:
         "metric": "streaming_events_per_sec",
         "streams": results,
         "samples": samples,
+        "progress": progress,
         "fixture": {
             "trip_sessions": n_trip_events,
             "ingest_dedup": n_docs,

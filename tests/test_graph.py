@@ -559,6 +559,26 @@ def test_ivf_assign_off_width_row_nulls_only_itself(spark):
     assert all(s is not None and c is not None for s, c in got.values())
 
 
+def test_ivf_assign_null_id_centroid_is_dropped(spark):
+    """A centroid row whose id is NULL neither raises (the driver-side
+    sort of the collected centroids) nor gets picked, even when it is
+    the best match for every vector."""
+    from flink_template_spark.operators.similarity import ivf_assign
+
+    schema = "id long, embedding array<double>"
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.2, 0.0]), (2, [1.0, 0.1, 0.0]), (3, [0.0, 1.0, 0.2])], schema
+    )
+    cents = spark.createDataFrame(
+        [(None, [1.0, 0.05, 0.05]), (7, [0.0, 0.0, 1.0]), (8, [0.0, 1.0, 0.0])], schema
+    )
+    got = {
+        r.id: r.cluster
+        for r in ivf_assign(df, cents, id_col="id", centroid_id="id").collect()
+    }
+    assert got == {1: 8, 2: 8, 3: 8}
+
+
 def test_exact_moments_single_row_group_is_null_not_abort(spark, monkeypatch):
     """A group with one event has undefined sample variance: NULL (the
     var_samp convention, mirrored by the oracle's NULLIF), not an

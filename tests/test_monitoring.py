@@ -96,3 +96,23 @@ def test_progress_ledger_is_bounded():
     for _ in range(10):
         rec.onQueryProgress(_Ev())
     assert len(rec.records) == 3  # deque bound, not a driver leak
+
+
+def test_progress_record_carries_add_batch_phase():
+    rec = ProgressRecorder()
+
+    class _Ev:
+        class progress:
+            json = json.dumps(
+                {
+                    "id": "x",
+                    "name": "n",
+                    "batchId": 0,
+                    "numInputRows": 1,
+                    "durationMs": {"triggerExecution": 5, "addBatch": 3},
+                }
+            )
+
+    rec.onQueryProgress(_Ev())
+    (r,) = rec.records
+    assert (r["batch_duration_ms"], r["add_batch_ms"]) == (5, 3)

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -88,3 +89,13 @@ def test_pq_adc_topk_finds_query_cluster(spark):
     # compressed-domain distances are non-negative and sorted
     dists = [r.adc_dist for r in got]
     assert dists == sorted(dists) and dists[0] >= 0.0
+
+
+def test_pq_codes_kernel_rejects_non_finite_codebook():
+    """One NaN codebook entry makes only some of a subspace's distances
+    NaN, where the vectorized argmin and the per-row loop disagree: the
+    kernel refuses such a codebook when it is built."""
+    from flink_template_spark.operators.pq import _codes_arrow
+
+    with pytest.raises(ValueError, match="finite"):
+        _codes_arrow([[[0.0, 0.0], [1.0, float("nan")]]], "embedding")
