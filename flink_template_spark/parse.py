@@ -257,7 +257,11 @@ def parse_trip_events(
     # per condition). Streams can't use monotonically_increasing_id, so
     # they carry a rand-based barrier instead; its VALUES are never
     # meaningful across sources — only the batch ordering semantics are
-    # relied on (operators.trip_agg).
+    # relied on (operators.trip_agg). The validity filter references
+    # ``ingest_seq`` so that ColumnPruning cannot drop it (and with it the
+    # barrier) when a consumer selects fewer columns: ``>= 0`` holds for
+    # both barriers and the optimizer cannot fold it, while ``isNotNull``
+    # would be folded away on this non-nullable column.
     seq_col = (
         F.rand(42) if raw.isStreaming else F.monotonically_increasing_id()
     )
@@ -289,7 +293,8 @@ def parse_trip_events(
     parsed = env.select(*parsed_cols, F.col("ingest_seq"))
 
     valid = (
-        F.col("trip_id").isNotNull()
+        (F.col("ingest_seq") >= 0)
+        & F.col("trip_id").isNotNull()
         & F.col("ts").isNotNull()
         & F.col("event_type").isin(accepted_types)
         # enum validation: invalid enum string ⇒ whole record dropped

@@ -10,6 +10,8 @@ you would also set on a 1000-executor cluster:
 - Arrow enabled: every Pandas-UDF boundary is Arrow-batched.
 - UTC session timezone: required for oracle comparison (DuckDB timestamps
   are naive-UTC) and the only sane choice for a multi-region lakehouse.
+- streaming checkpoints commit through the FileSystem-based manager (see
+  the comment at the conf).
 """
 
 from __future__ import annotations
@@ -57,6 +59,25 @@ def get_spark(
         # classes are KB-scale; 4096 entries is a few hundred MB worst
         # case against a 16g driver).
         .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # Streaming checkpoints (offset log, commit log, state-store
+        # deltas) commit through FileSystem, not Spark's default
+        # FileContext manager. Without libhadoop, Hadoop's local
+        # AbstractFileSystem forks `chmod` on every create and `readlink`
+        # (getFileLinkStatus) on every rename check; on 4 cores the trip
+        # stream's state commit fell from ~330 to ~30 ms per micro-batch
+        # without them. The commit stays atomic on every store
+        # (javap, spark-sql 4.1.2 / hadoop-client-api 3.4.2):
+        # FileSystemBasedCheckpointFileManager.renameTempFile is exists
+        # check -> FileSystem.rename -> FileAlreadyExists if the rename
+        # failed onto an existing target. On file: the FileContext path is
+        # also check-then-rename (AbstractFileSystem.renameInternal's
+        # getFileLinkStatus); on HDFS DistributedFileSystem.rename(Path,
+        # Path) goes to DFSClient.rename, which refuses an existing target.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.ui.enabled", "false")
         # the \r-based console progress bar corrupts piped stdout
         .config("spark.ui.showConsoleProgress", "false")

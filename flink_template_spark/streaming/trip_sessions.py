@@ -30,6 +30,7 @@ from functools import partial
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -95,9 +96,11 @@ def _finalize(trip_id: int, st: tuple) -> pd.DataFrame:
 
 
 def _fold(prev: tuple | None, pdfs: Iterator[pd.DataFrame]) -> tuple[tuple, int]:
-    """Fold a batch of rows into the (possibly existing) session state.
-    Returns the updated state tuple plus the max event-time seen, in
-    epoch ms (0 if the batch had no rows)."""
+    """Fold a batch of rows (``_sessionize``'s six columns) into the
+    (possibly existing) session state. The vin is the first non-NULL
+    ``start_vin``, i.e. the first TripStart's. Returns the updated state
+    tuple plus the max event-time seen, in epoch ms (0 if the batch had
+    no rows)."""
     *buffers, vin, n_events, deadline_ms = prev or ((), (), (), (), (), None, 0, 0)
     gps_ts, gps_lat, gps_lon, sp_ts, sp_kmh = map(list, buffers)
 
@@ -107,8 +110,8 @@ def _fold(prev: tuple | None, pdfs: Iterator[pd.DataFrame]) -> tuple[tuple, int]
     for pdf in pdfs:
         for row in pdf.itertuples(index=False):
             n_events += 1
-            if row.event_type == "TripStartRelativeTime" and vin is None:
-                vin = row.vin
+            if vin is None:
+                vin = row.start_vin
             ts = int(row.ts.value // 1_000)  # pandas ns → us
             max_event_ms = max(max_event_ms, ts // 1_000)
             # pd.isna covers both None and NaN
@@ -139,8 +142,9 @@ def _processing_time_deadline(state: GroupState, deadline_ms: int, _: int) -> in
 def _event_time_deadline(state: GroupState, deadline_ms: int, max_event_ms: int) -> int:
     # event-time session gap: the deadline only ever moves FORWARD to
     # last-event-time + gap (late rows below the old deadline don't
-    # shrink it); fires when the watermark passes it — replay-
-    # deterministic, unlike any wall-clock rule.
+    # shrink it); fires when the watermark passes it. The watermark moves
+    # once per micro-batch, so a gap over MAX_RETENTION_MS inside one
+    # batch does not split the session.
     deadline_ms = max(deadline_ms, max_event_ms + MAX_RETENTION_MS)
     state.setTimeoutTimestamp(deadline_ms)
     return deadline_ms
@@ -172,8 +176,21 @@ def _sessionize(
     deadline_rule: Callable[[GroupState, int, int], int],
     timeout: str,
 ) -> DataFrame:
+    # Only the columns _fold reads cross into Python: the pandas UDF
+    # converts every column of every group, and the vin is needed only
+    # from TripStart rows. ``ts`` keeps the watermark EventTimeTimeout
+    # needs, so the projection comes after withWatermark.
     return (
         parsed_stream.withWatermark("ts", watermark)
+        .select(
+            "trip_id",
+            "ts",
+            F.when(F.col("event_type") == "TripStartRelativeTime", F.col("vin"))
+            .alias("start_vin"),
+            "speed_kmh",
+            "lat",
+            "lon",
+        )
         .groupBy("trip_id")
         .applyInPandasWithState(
             partial(_session_fn, deadline_rule=deadline_rule),
@@ -207,13 +224,18 @@ def sessionize_trips(
 def sessionize_trips_event_time(
     parsed_stream: DataFrame, watermark: str = "3 seconds"
 ) -> DataFrame:
-    """Watermark-driven sessionization dual: a session closes when event
-    time (not wall clock) goes quiet for MAX_RETENTION_MS — i.e. the
-    watermark passes last-event + gap. Same state, same finalize, same
-    FIRE_AND_PURGE; this is the variant to use when replaying history
-    (a backfill at 100 TB replays days of events in minutes of wall
-    clock — a processing-time trigger would merge everything into one
-    session, the event-time gap reproduces production sessions exactly).
+    """Watermark-driven sessionization dual: a session closes at the
+    first micro-batch whose watermark has passed its last event time +
+    MAX_RETENTION_MS. Same state, same finalize, same FIRE_AND_PURGE;
+    this is the variant to use when replaying history (a backfill at
+    100 TB replays days of events in minutes of wall clock — a
+    processing-time trigger would merge everything into one session).
+
+    The watermark moves once per micro-batch, not per event, so the
+    sessions depend on how the input is cut into batches: a gap over
+    MAX_RETENTION_MS between two readings that arrive in the same
+    micro-batch does not split the trip, whereas a per-event gap rule
+    (Spark's ``session_window``) would split it.
     """
     return _sessionize(
         parsed_stream,

@@ -441,6 +441,36 @@ def test_checkpoint_recovery_no_reprocessing(spark, tmp_path):
     assert rows[1] == (125.0, 1)
 
 
+def test_checkpoint_manager_refuses_to_overwrite_a_commit(spark, tmp_path):
+    """The engine session commits checkpoints through the FileSystem-based
+    manager, and that manager keeps the property exactly-once relies on:
+    a second commit of the same batch file fails and leaves the first
+    one intact."""
+    jvm = spark._jvm
+    pkg = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    fm = pkg.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)), hadoop_conf
+    )
+    assert fm.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+    f = tmp_path / "0"
+    target = jvm.org.apache.hadoop.fs.Path(str(f))
+    out = fm.createAtomic(target, False)
+    out.write(bytearray(b"first"))
+    out.close()
+
+    out = fm.createAtomic(target, False)
+    out.write(bytearray(b"second"))
+    with pytest.raises(Exception) as err:
+        out.close()
+    exists_error = jvm.java.lang.Class.forName(
+        "org.apache.hadoop.fs.FileAlreadyExistsException"
+    )
+    assert exists_error.isInstance(err.value.java_exception)
+    assert f.read_bytes() == b"first"
+
+
 def test_streaming_sliding_window(spark, tmp_path):
     from flink_template_spark.streaming.windows import sliding_counts
 

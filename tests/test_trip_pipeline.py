@@ -160,6 +160,26 @@ def test_parse_evaluates_from_json_once(spark, tmp_path):
     plan = parsed._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("from_json") == 1, f"{plan.count('from_json')} from_json calls"
 
+    # a consumer that drops ``ingest_seq`` must not prune the barrier away
+    narrowed = parsed.select("trip_id", "ts", "speed_kmh")
+    plan = narrowed._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("from_json") == 1, f"narrowed: {plan.count('from_json')}"
+
+    # nor the sessionizer's six-column projection; a streaming plan is
+    # optimized only on start(), so run the optimizer on the analyzed plan
+    from flink_template_spark.parse import read_trip_events_stream
+    from flink_template_spark.streaming.trip_sessions import (
+        sessionize_trips_event_time,
+    )
+
+    qe = sessionize_trips_event_time(
+        read_trip_events_stream(spark, str(tmp_path))
+    )._jdf.queryExecution()
+    plan = spark._jsparkSession.sessionState().optimizer().execute(qe.analyzed())
+    # "(": the source path printed in the plan holds this test's name
+    n = plan.toString().count("from_json(")
+    assert n == 1, f"sessionized stream: {n} from_json calls"
+
 
 def test_event_data_surface_opt_in(spark):
     """Quirk Q1: the reference declares TripEvent/EventData (Trip.kt:24-28,

@@ -41,7 +41,8 @@ CASES = {
           (20, D, N, 4, 40.70)],
          [(35, D, N, 2, 40.70), (50, D, N, 30, 40.71), (60, D, N, 1, 40.72)]],
         (7, "VIN-C", 60, 35, 25), [40.70, 40.71, 40.72]),
-    # only a TripStart sets the vin, and the first one wins across batches
+    # only a TripStart sets the vin (the TripEnd's is ignored), and the
+    # first one wins across batches
     "vin_from_first_trip_start": (
         [[(0, D, N, 10, N), (1, E, "VIN-END", N, N)],
          [(2, S, "VIN-1", N, N), (3, S, "VIN-2", N, N), (4, D, N, 12, N)],
@@ -52,8 +53,17 @@ CASES = {
 
 
 def _batch(rows: list[tuple]) -> pd.DataFrame:
-    df = pd.DataFrame(rows, columns=["sec", "event_type", "vin", "speed_kmh", "lat"])
-    return df.assign(trip_id=7, ts=T0 + pd.to_timedelta(df.sec, unit="s"), lon=LON)
+    """The six columns ``_sessionize`` hands to ``_fold``: the vin only on
+    TripStart rows, as ``start_vin``."""
+    sec, _, _, speed_kmh, lat = zip(*rows)
+    return pd.DataFrame({
+        "trip_id": 7,
+        "ts": T0 + pd.to_timedelta(sec, unit="s"),
+        "start_vin": [vin if et == S else None for _, et, vin, _, _ in rows],
+        "speed_kmh": speed_kmh,
+        "lat": lat,
+        "lon": LON,
+    })
 
 
 def _path_km(lats: list[float]) -> float:
