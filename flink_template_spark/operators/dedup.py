@@ -144,11 +144,6 @@ def shingle_rows(
     return out.repartition(id_col).distinct() if distinct else out
 
 
-def _shingled(docs: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
-    """(id, shingle) exploded distinct word-shingles."""
-    return shingle_rows(docs, n, id_col=id_col, text_col=text_col)
-
-
 def minhash_signatures(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -184,17 +179,13 @@ def minhash_signatures(
     return sh.groupBy(id_col).agg(*aggs)
 
 
-def minhash_band_index(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, band, band_key) rows — the LSH bucket index of a corpus.
-
-    One pass over the signatures: every band as (band, band_key) rows
-    via posexplode — NOT one select per band unioned (that recomputes
-    the whole shingle→signature pipeline once per band). Persisted, this
-    is the membership index streaming ingest dedups against
-    (streaming.ingest_dedup)."""
-    sigs = minhash_signatures(docs, id_col, text_col)
+def signature_bands(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(id, band, band_key) rows of a ``minhash_signatures`` frame: each
+    band's ROWS_PER_BAND signature values joined by "_" (the DuckDB
+    oracles build the same string). One pass over the signatures: every
+    band as (band, band_key) rows via posexplode — NOT one select per
+    band unioned (that recomputes the whole shingle→signature pipeline
+    once per band)."""
     band_keys = F.array(
         *[
             F.concat_ws(
@@ -212,36 +203,57 @@ def minhash_band_index(
     )
 
 
+def minhash_band_index(
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """(id, band, band_key) rows — the LSH bucket index of a corpus.
+    Persisted, this is the membership index streaming ingest dedups
+    against (streaming.ingest_dedup)."""
+    return signature_bands(minhash_signatures(docs, id_col, text_col), id_col)
+
+
+def bucket_pairs(
+    rows: DataFrame, bucket_cols: list[str], item: "str | F.Column"
+) -> DataFrame:
+    """(id_a, id_b): every unordered pair of distinct ``item`` values
+    (a column name or expression, e.g. a struct) that share a bucket,
+    emitted once per bucket they share, with id_a < id_b in
+    ``sort_array`` order.
+
+    The one within-bucket pair expansion of the text LSH paths. Items
+    are collected per bucket, not self-joined: the input is scanned
+    once, and the quadratic blow-up stays bounded by the largest bucket
+    — the property that makes LSH sub-quadratic (and the one place a
+    bucket-skew bound would go). The i<j combinations come from two
+    chained codegen generators (posexplode, then explode of a
+    Column-sliced suffix); the equivalent nested ``transform`` lambda
+    expansion runs interpreted and measured ~4× slower at sf0.1."""
+    buckets = rows.groupBy(*bucket_cols).agg(
+        F.sort_array(F.collect_set(item)).alias("ids")
+    )
+    lhs = buckets.filter(F.size("ids") > 1).select(
+        F.posexplode("ids").alias("i", "id_a"), "ids"
+    )
+    return lhs.select(
+        "id_a",
+        F.explode(
+            F.slice("ids", F.col("i") + F.lit(2), F.size("ids"))
+        ).alias("id_b"),
+    )
+
+
 def minhash_lsh_pairs(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """Candidate near-dup pairs (id_a < id_b, n_shared_bands ≥ 1).
 
     Banding: signature split into LSH_BANDS bands of ROWS_PER_BAND; docs
-    sharing any full band land in the same bucket. The join is
-    per-(band, band_key) — this is what keeps it sub-quadratic at scale.
+    sharing any full band land in the same bucket, and pairs are only
+    ever expanded within a (band, band_key) bucket (:func:`bucket_pairs`)
+    — this is what keeps it sub-quadratic at scale.
     """
     bands = minhash_band_index(docs, id_col, text_col)
-    # pairs from within-bucket combinations (collect ids per bucket,
-    # expand i<j pairs) instead of a bucket self-join: the signature
-    # pipeline is scanned once, and the quadratic blow-up stays bounded
-    # by the largest bucket — the property that makes LSH sub-quadratic.
-    buckets = bands.groupBy("band", "band_key").agg(
-        F.sort_array(F.collect_set(id_col)).alias("ids")
-    )
-    # i<j combinations via two chained codegen generators (posexplode,
-    # then explode of a Column-sliced suffix) — the equivalent nested
-    # `transform` lambda expansion runs interpreted and measured ~4×
-    # slower on this stage at sf0.1
-    lhs = buckets.filter(F.size("ids") > 1).select(
-        F.posexplode("ids").alias("i", "id_a"), "ids"
-    )
-    pairs = lhs.select(
-        "id_a",
-        F.explode(
-            F.slice("ids", F.col("i") + F.lit(2), F.size("ids"))
-        ).alias("id_b"),
-    )
+    pairs = bucket_pairs(bands, ["band", "band_key"], id_col)
     return pairs.groupBy("id_a", "id_b").agg(
         F.count(F.lit(1)).alias("n_shared_bands")
     )
@@ -393,20 +405,8 @@ def simhash_hamming_pairs(
         F.col("simhash").alias("sig"),
         F.posexplode(band_arr).alias("band", "band_key"),
     )
-    buckets = bands.groupBy("band", "band_key").agg(
-        F.sort_array(F.collect_set(F.struct("id", "sig"))).alias("items")
-    )
-    # codegen i<j expansion (posexplode + Column-sliced explode), same
-    # rationale as minhash_lsh_pairs — no interpreted lambdas
-    lhs = buckets.filter(F.size("items") > 1).select(
-        F.posexplode("items").alias("i", "a"), "items"
-    )
-    pairs = lhs.select(
-        "a",
-        F.explode(
-            F.slice("items", F.col("i") + F.lit(2), F.size("items"))
-        ).alias("b"),
-    )
+    # struct items: the sigs ride the candidate row for verification
+    pairs = bucket_pairs(bands, ["band", "band_key"], F.struct("id", "sig"))
     # score BEFORE dedup (optimization r13, guide §2.2 — shuffle fewer
     # bytes): hamming is a pure map-side bit_count over the sigs riding
     # the candidate row, and every duplicate of a pair carries identical
@@ -417,9 +417,9 @@ def simhash_hamming_pairs(
     # before the shuffle instead of after it (2.95 → see A/B table).
     return (
         pairs.select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig")))
+            F.col("id_a.id").alias("id_a"),
+            F.col("id_b.id").alias("id_b"),
+            F.bit_count(F.col("id_a.sig").bitwiseXOR(F.col("id_b.sig")))
             .cast("int")
             .alias("hamming"),
         )
@@ -437,28 +437,14 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Exact Jaccard over distinct 3-word shingles for pairs sharing ≥1
     shingle; filtered to ``jaccard >= threshold``."""
-    sh = _shingled(docs, id_col, text_col)
+    sh = shingle_rows(docs, 3, id_col=id_col, text_col=text_col)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-
     # pair intersection counts via within-shingle-bucket combinations
     # (single scan of the shingle pipeline; a self-join would compute the
     # shingling twice). Blow-up is bounded by the hottest shingle's doc
     # list — the same bound the join has.
-    buckets = (
-        sh.groupBy("shingle")
-        .agg(F.sort_array(F.collect_set(id_col)).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    # codegen i<j expansion (see minhash_lsh_pairs) — chained generators,
-    # no interpreted transform lambdas
     inter = (
-        buckets.select(F.posexplode("ids").alias("i", "id_a"), "ids")
-        .select(
-            "id_a",
-            F.explode(
-                F.slice("ids", F.col("i") + F.lit(2), F.size("ids"))
-            ).alias("id_b"),
-        )
+        bucket_pairs(sh, ["shingle"], id_col)
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
@@ -528,7 +514,7 @@ def jaccard_prefix_pairs(
     one equi-join on prefix shingle, one verify join on the (small)
     candidate set. No all-pairs stage anywhere.
     """
-    sh = _shingled(docs, id_col, text_col, n)
+    sh = shingle_rows(docs, n, id_col=id_col, text_col=text_col)
     # global document frequency per shingle — the total order everything
     # below agrees on. Window count over the shingle partition, not
     # groupBy+self-join: one exchange on shingle instead of two plus a
@@ -741,7 +727,7 @@ def containment_prefix_pairs(
     DIV t_den; verify filter n_inter * t_den >= t_num * n_a), so the
     DuckDB brute-force oracle matches bit-for-bit.
     """
-    sh = _shingled(docs, id_col, text_col, n)
+    sh = shingle_rows(docs, n, id_col=id_col, text_col=text_col)
     ranked = (
         sh.withColumn(
             "dfreq", F.count(F.lit(1)).over(W.partitionBy("shingle"))

@@ -22,14 +22,7 @@ import pandas as pd  # module-level so pandas_udf type hints resolve
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from flink_template_spark.functions.vector import (
-    cosine,
-    cosine_arrow,
-    dot,
-    dot_arrow,
-    l2_norm,
-    valid_vec,
-)
+from flink_template_spark.functions.vector import cosine_arrow, valid_vec
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -193,10 +186,11 @@ def ivf_assign(
     )
 
 
-# target rows per block for the blocked exact pair scan: bounds each
-# task's matrices at ~2·TARGET·d·8 bytes while keeping enough block
-# pairs for parallelism; block count derives from the corpus size
-# IN-PLAN (no eager count job), so the same code is right at any SF
+# target rows per sub-block for the blocked exact pair scan: bounds each
+# kernel row (two sub-blocks) and its matrices at ~2·TARGET·d·8 bytes
+# while keeping enough sub-block pairs for parallelism; each block's
+# sub-block count derives from its size IN-PLAN (no eager count job), so
+# the same code is right at any SF and for any block skew
 _PAIR_BLOCK_TARGET = 256
 
 
@@ -210,15 +204,24 @@ def pair_cos_blocked(
     score: str = "cos",
 ) -> DataFrame:
     """(id_a, id_b, raw_cos) for every unordered pair of valid vectors
-    with RAW cosine ≥ ``min_raw`` — the blocked exact dual of the
-    per-pair fold join (optimization r13, guide §4.2/§2.2).
+    in the same block with RAW cosine ≥ ``min_raw`` — the blocked exact
+    dual of the per-pair fold join (optimization r13, guide §4.2/§2.2).
 
-    The r12 rule was "Arrow loses on pair-join shapes" because the join
-    ships two full vectors per PAIR row through the Arrow boundary.
-    Blocking restores the win: vectors are grouped into ~equal hash
-    blocks (count-derived in-plan scalar → adaptive at any scale), each
-    unordered BLOCK pair becomes one task, and each block's matrix
-    crosses the boundary once per partner block instead of once per
+    Blocks: ``block_col`` is a NATURAL block key (an IVF cluster, an LSH
+    bucket, a triplet cell) and pairs are scored strictly WITHIN a block
+    (semdedup / triplet semantics), never across blocks; a vector whose
+    key is NULL pairs with nothing, as under an equi-join on the key.
+    Without ``block_col`` the whole corpus is one block.
+
+    One (block, sub-block) path serves both (EDBT 2019's balanced work
+    units): every block splits into n_sub = ⌈count/_PAIR_BLOCK_TARGET⌉
+    hash sub-blocks (pmod(hash(id), n_sub); the per-block count is an
+    aggregate broadcast back in-plan), and each kernel row is ONE pair
+    of sub-blocks (sub_a ≤ sub_b) of one block, partitioned by
+    (block, sub_a). So no row holds more than two sub-blocks, and a hot
+    cluster or bucket runs as many tasks instead of one dense b² matrix
+    in one task. Each sub-block's matrix crosses
+    the Arrow boundary once per partner sub-block instead of once per
     pair. Inside the kernel the fold is replayed EXACTLY:
 
     - dot: acc += A[:,i] * B[:,j-th col], accumulated dimension-by-
@@ -235,14 +238,12 @@ def pair_cos_blocked(
     reach the Arrow NaN→NULL boundary (valid_vec admission). Pairs of
     DIFFERENT vector widths yield NULL dots under zip_with (pad → NULL
     fold) and are dropped by any threshold filter — the kernel
-    reproduces that by bucketing each block by width and only scoring
-    equal-width pairs. ``min_raw`` must carry the caller's rounding
-    margin (round(x, 6) ≥ t ⟹ x ≥ t − 5e-7; callers pass t − 1e-6).
+    reproduces that by bucketing each sub-block by width and only
+    scoring equal-width pairs. ``min_raw`` must carry the caller's
+    rounding margin (round(x, 6) ≥ t ⟹ x ≥ t − 5e-7; callers pass
+    t − 1e-6).
 
     Variants for the other pair-scoring consumers:
-    - ``block_col``: use a NATURAL block key (e.g. an IVF cluster)
-      instead of hash blocking — pairs are then scored strictly WITHIN
-      a block (semdedup / triplet semantics), never across blocks.
     - ``score="dot"``: raw dot instead of cosine (no norm division) —
       the pre-unit-normalized triplet shape.
     - ``max_raw``: keep the LOW tail too — a row survives if raw ≥
@@ -251,66 +252,73 @@ def pair_cos_blocked(
     import numpy as np
 
     id_type = vectors.schema[id_col].dataType.simpleString()
-
-    if block_col is None:
-        valid = vectors.filter(valid_vec(F.col(vec_col))).select(
-            id_col, vec_col
+    block = F.col(block_col) if block_col is not None else F.lit(0)
+    # the exchange on id is read by both the size count and the rows
+    # (exchange reuse), so a Python-computed key (ivf_assign's,
+    # band_signatures') is evaluated once per row
+    valid = (
+        vectors.filter(valid_vec(F.col(vec_col)))
+        .select(block.alias("__bk"), id_col, vec_col)
+        .repartition(id_col)
+    )
+    # block sizes from partial counts, broadcast back, so neither a hot
+    # block nor the one-block corpus funnels into one task. The count
+    # reads vec_col (never NULL here) so that column pruning leaves
+    # both readers of the exchange above the same columns, which keeps
+    # it reused. It counts only non-NULL keys: the NULL key gets no
+    # size row, so its vectors pair with nothing, as under an equi-join
+    # on the key. The key is never tested with isNotNull, and the join
+    # is null-safe, because an isNotNull filter, written or inferred
+    # from an equi-join, is pushed below the key's projection and
+    # evaluates the key twice.
+    sizes = (
+        valid.groupBy(F.col("__bk").alias("__sk"))
+        .agg(
+            F.count(
+                F.when(F.col("__bk").isNotNull(), F.col(vec_col))
+            ).alias("__n")
         )
-        nbdf = valid.agg(
-            F.greatest(
-                F.lit(1).cast("int"),
-                F.ceil(
-                    F.count(F.lit(1)).cast("double")
-                    / float(_PAIR_BLOCK_TARGET)
-                ).cast("int"),
-            ).alias("__nb")
+        .filter(F.col("__n") > 0)
+    )
+    n_sub = F.ceil(F.col("__n") / float(_PAIR_BLOCK_TARGET)).cast("int")
+    # a vector of sub-block s joins each of the n_sub sub-block pairs
+    # (min(s, p), max(s, p)) of its block once; the repartition on
+    # (block, sub_a) spreads a hot block's pairs over tasks
+    sb, p = F.col("__sb"), F.col("__p")
+    rows = (
+        valid.join(
+            F.broadcast(sizes), F.col("__bk").eqNullSafe(F.col("__sk"))
         )
-        keyed = valid.crossJoin(F.broadcast(nbdf)).select(
-            F.pmod(F.hash(F.col(id_col)), F.col("__nb")).alias("__bk"),
-            id_col,
-            vec_col,
-        )
-    else:
-        keyed = vectors.filter(valid_vec(F.col(vec_col))).select(
-            F.col(block_col).alias("__bk"), id_col, vec_col
-        )
-    blocks = (
-        keyed.groupBy("__bk")
-        .agg(F.collect_list(F.struct(id_col, vec_col)).alias("__items"))
         .select(
-            "__bk",
-            F.transform("__items", lambda x: x[id_col]).alias("ids"),
-            F.transform("__items", lambda x: x[vec_col]).alias("vecs"),
+            "__bk", id_col, vec_col,
+            F.pmod(F.hash(F.col(id_col)), n_sub).alias("__sb"),
+            F.explode(F.sequence(F.lit(0), n_sub - 1)).alias("__p"),
         )
+        .select(
+            "__bk", id_col, vec_col, sb,
+            F.least(sb, p).alias("sb_a"),
+            F.greatest(sb, p).alias("sb_b"),
+        )
+        .repartition("__bk", "sb_a")
     )
-    lhs = blocks.select(
-        F.col("__bk").alias("bk_a"),
-        F.col("ids").alias("ids_a"),
-        F.col("vecs").alias("vecs_a"),
+
+    def side(sub: str, out: str):
+        mine = F.filter("__items", lambda x: x["__sb"] == F.col(sub))
+        return [
+            F.transform(mine, lambda x: x[id_col]).alias(f"ids_{out}"),
+            F.transform(mine, lambda x: x[vec_col]).alias(f"vecs_{out}"),
+        ]
+
+    sub_pairs = (
+        rows.groupBy("__bk", "sb_a", "sb_b")
+        .agg(F.collect_list(F.struct("__sb", id_col, vec_col)).alias("__items"))
+        .select("sb_a", *side("sb_a", "a"), "sb_b", *side("sb_b", "b"))
     )
-    if block_col is not None:
-        # natural blocks: within-block pairs only, no block-pair join —
-        # the (ids, vecs) row IS the task
-        joined = lhs.select(
-            "bk_a",
-            "ids_a",
-            "vecs_a",
-            F.col("ids_a").alias("ids_b"),
-            F.col("vecs_a").alias("vecs_b"),
-            F.col("bk_a").alias("bk_b"),
-        )
-    else:
-        rhs = blocks.select(
-            F.col("__bk").alias("bk_b"),
-            F.col("ids").alias("ids_b"),
-            F.col("vecs").alias("vecs_b"),
-        )
-        joined = lhs.join(rhs, F.col("bk_a") <= F.col("bk_b"))
 
     want_cos = score == "cos"
 
     def _mats(ids, vecs):
-        """Width-bucketed (ids, matrix, norms) triples for one block."""
+        """Width-bucketed (ids, matrix, norms) triples for one sub-block."""
         by_w: dict = {}
         for i, v in zip(ids, vecs):
             by_w.setdefault(len(v), ([], []))
@@ -338,7 +346,7 @@ def pair_cos_blocked(
                 pdf["vecs_a"],
                 pdf["ids_b"],
                 pdf["vecs_b"],
-                (pdf["bk_a"] == pdf["bk_b"]).to_numpy(),
+                (pdf["sb_a"] == pdf["sb_b"]).to_numpy(),
             ):
                 for ia, A, na in _mats(ids_a, vecs_a):
                     for ib, B, nb in _mats(ids_b, vecs_b):
@@ -375,7 +383,7 @@ def pair_cos_blocked(
                     }
                 )
 
-    return joined.mapInPandas(
+    return sub_pairs.mapInPandas(
         gen, schema=f"id_a {id_type}, id_b {id_type}, raw_cos double"
     )
 
@@ -385,54 +393,23 @@ def cosine_near_dup_exact(
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "blocked",
 ) -> DataFrame:
     """All pairs with cosine ≥ threshold — exact O(n²) baseline.
 
     Correctness reference only: at 100 TB use ``cosine_near_dup_lsh``,
     which explodes candidates only within hash buckets.
 
-    ``impl="blocked"`` (default, optimization r13) scores block pairs
-    through :func:`pair_cos_blocked` — bit-identical raw cosines, with
-    F.round (BigDecimal HALF_UP, ~1 µs/row over n² pairs the old plan
-    paid) applied only to the ≥ threshold−1e-6 survivors; the margin is
-    conservative for round-half-up (round(x,6) ≥ t needs x ≥ t−5e-7).
-    ``impl="fold"`` keeps the original per-pair JVM fold join — the
-    differential pin for the kernel."""
-    if impl == "blocked":
-        raw = pair_cos_blocked(
-            vectors, threshold - 1e-6, id_col=id_col, vec_col=vec_col
-        )
-        return (
-            raw.select(
-                "id_a", "id_b", F.round(F.col("raw_cos"), 6).alias("cos_sim")
-            )
-            .filter(F.col("cos_sim") >= threshold)
-            .orderBy("id_a", "id_b")
-        )
-    with_norm = _spread(vectors.filter(valid_vec(F.col(vec_col)))).select(
-        id_col, vec_col, l2_norm(F.col(vec_col)).alias("__norm")
-    )
-    a = with_norm.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("vec_a"),
-        F.col("__norm").alias("norm_a"),
-    )
-    b = with_norm.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vec_b"),
-        F.col("__norm").alias("norm_b"),
+    The corpus is one block of :func:`pair_cos_blocked` (hash
+    sub-blocks, bit-identical raw cosines), with F.round (BigDecimal
+    HALF_UP) applied only to the ≥ threshold−1e-6 survivors; the margin
+    is conservative for round-half-up (round(x,6) ≥ t needs
+    x ≥ t−5e-7)."""
+    raw = pair_cos_blocked(
+        vectors, threshold - 1e-6, id_col=id_col, vec_col=vec_col
     )
     return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                dot(F.col("vec_a"), F.col("vec_b"))
-                / (F.col("norm_a") * F.col("norm_b")),
-                6,
-            ).alias("cos_sim"),
+        raw.select(
+            "id_a", "id_b", F.round(F.col("raw_cos"), 6).alias("cos_sim")
         )
         .filter(F.col("cos_sim") >= threshold)
         .orderBy("id_a", "id_b")
@@ -456,13 +433,16 @@ def semdedup(
     Scale contract: the pair scoring is per-cluster (natural blocks in
     :func:`pair_cos_blocked`), so cost is quadratic only in the largest
     CELL, never the corpus — with K centroids sized to the corpus
-    (K ~ N/target cell size) this is the standard SemDeDup shape.
+    (K ~ N/target cell size) this is the standard SemDeDup shape. A
+    large cluster splits into hash sub-blocks, so its sub-block pairs
+    run as many kernel rows and tasks, each holding at most two
+    sub-blocks.
 
     Optimization r13: the within-cluster pair join (each pair row
     shipping two vectors + two norms, one Arrow eval + one BigDecimal
-    round per pair) became one blocked-kernel task per cluster — raw
-    cosines bit-identical (exact-fold kernel), F.round applied only to
-    the ≥ threshold−1e-6 survivors. Row-identical by
+    round per pair) became the blocked kernel — raw cosines
+    bit-identical (exact-fold kernel), F.round applied only to the
+    ≥ threshold−1e-6 survivors. Row-identical by
     tests/test_r13_opt.py::test_semdedup_blocked_identical."""
     assigned = ivf_assign(vectors, centroids, id_col=id_col, vec_col=vec_col)
     raw = pair_cos_blocked(
@@ -603,8 +583,9 @@ def cosine_near_dup_lsh(
     within (band, signature) buckets, never across the full table.
 
     Optimization r13: bucket pairs are scored by the blocked exact-fold
-    kernel with the (band, sig) bucket as the natural block — one task
-    per bucket, raw cosines bit-identical to the fold path, and the
+    kernel with the (band, sig) bucket as the natural block — a hot
+    bucket splits into sub-block pairs over many tasks, raw cosines are
+    bit-identical to the fold path, and the
     margin filter (raw ≥ threshold−1e-6, conservative for
     round-half-up) runs INSIDE the kernel. The old plan shipped every
     bucket-collision row (two 64-dim vectors + two norms, ~550 B) into

@@ -2475,6 +2475,84 @@ _MH_AGREE_DUCK = " + ".join(
 )
 
 
+def _minhash_scored_candidates(docs: DataFrame) -> DataFrame:
+    """(id_a, id_b, est, exact) for every MinHash LSH candidate pair:
+    the signature-agreement estimate (matching components /
+    NUM_HASHES, an exact double) and the UNROUNDED exact 3-shingle
+    Jaccard. The one scored-candidate table behind
+    q_minhash_estimate_error (per-decile rollup) and
+    q_minhash_jaccard_err (pair grain); each applies its own rounding.
+
+    Pinned subtrees (localCheckpoint): ONE signature pipeline serves
+    the band keys and both estimate sides, ONE shingle table serves the
+    sizes and both exact-join sides — calling minhash_lsh_pairs,
+    ngram_jaccard_pairs and minhash_signatures as black boxes would
+    plan FOUR shingle→md5→16-min pipelines, which exchange reuse cannot
+    stitch back together across differing downstream projections
+    (measured 4.12 → 3.29 s min-of-5 at sf0.1, r12). Candidates are
+    the banded bucket pair set of minhash_lsh_pairs; a band-collision
+    candidate with ZERO shared shingles keeps an exact 0 via the LEFT
+    join + coalesce."""
+    from flink_template_spark.operators.dedup import (
+        bucket_pairs,
+        shingle_rows,
+        signature_bands,
+    )
+
+    sigs = minhash_signatures(docs).localCheckpoint(eager=False)
+    cands = (
+        bucket_pairs(signature_bands(sigs), ["band", "band_key"], "doc_id")
+        .distinct()
+        .localCheckpoint(eager=False)  # consumers: inter join + scored
+    )
+    sh = shingle_rows(docs, 3).localCheckpoint(
+        eager=False
+    )  # consumers: sizes + both exact-join sides
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    inter = (
+        cands.join(sh.select(F.col("doc_id").alias("id_a"), "shingle"), "id_a")
+        .join(
+            sh.select(F.col("doc_id").alias("id_b"), "shingle"),
+            ["id_b", "shingle"],
+        )
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("n_inter"))
+    )
+
+    def side(s: str) -> DataFrame:
+        return sigs.select(
+            F.col("doc_id").alias(f"id_{s}"),
+            *[F.col(f"mh_{i}").alias(f"{s}_{i}") for i in range(NUM_HASHES)],
+        )
+
+    def size(s: str) -> DataFrame:
+        return sizes.select(
+            F.col("doc_id").alias(f"id_{s}"), F.col("n_sh").alias(f"n_{s}")
+        )
+
+    agree = sum(
+        (F.col(f"a_{i}") == F.col(f"b_{i}")).cast("int")
+        for i in range(NUM_HASHES)
+    )
+    ni = F.coalesce(F.col("n_inter"), F.lit(0))
+    return (
+        cands.join(inter, ["id_a", "id_b"], "left")
+        .join(size("a"), "id_a")
+        .join(size("b"), "id_b")
+        .join(side("a"), "id_a")
+        .join(side("b"), "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            (agree.cast("double") / F.lit(float(NUM_HASHES))).alias("est"),
+            (
+                ni.cast("double")
+                / (F.col("n_a") + F.col("n_b") - ni).cast("double")
+            ).alias("exact"),
+        )
+    )
+
+
 @register(
     "q_minhash_estimate_error",
     oracle=f"""
@@ -2551,108 +2629,11 @@ def q_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     intersection counts (LEFT: a hash-collision candidate with zero
     overlap scores exact 0). Per-pair terms round to 8 dp and sum as
     DECIMAL — order-independent group means."""
-    from flink_template_spark.operators.dedup import (
-        minhash_signatures as _sigs,
-        shingle_rows as _shingles,
-    )
-    from flink_template_spark.functions.hashing import (
-        LSH_BANDS as _B,
-        NUM_HASHES as _NH,
-        ROWS_PER_BAND as _R,
-    )
-
-    # r12 opt: the original body called minhash_lsh_pairs,
-    # ngram_jaccard_pairs and minhash_signatures×2 as black boxes —
-    # FOUR independent shingle→md5→16-min signature pipelines in one
-    # plan (Spark's exchange reuse cannot stitch them back together
-    # across differing downstream projections). This is the same
-    # pinned-subtree shape q_minhash_jaccard_err already uses: ONE
-    # signature pipeline (band keys + both estimate sides), ONE
-    # shingle table (sizes + both exact-join sides). Every output
-    # expression below is the original tree on the same operands —
-    # candidates are the identical banded bucket pair set, exact_j is
-    # the identical round-6 Jaccard with the identical LEFT-join
-    # zero-overlap coalesce. Measured 4.12 → 3.29 s min-of-5 at sf0.1
-    # (−20%; exchange reuse had already stitched part of the
-    # duplication back together — the pins buy the rest plus ~60
-    # fewer plan nodes).
+    # exact_j rounds to 6 dp BEFORE the 8-dp decimal sums and the
+    # |est − exact| term, as the oracle's scored CTE does
     docs = load_table(spark, sf_dir, "documents")
-    sigs = _sigs(docs).localCheckpoint(eager=False)
-    band_keys = F.array(
-        *[
-            F.concat_ws(
-                "_",
-                *[
-                    F.col(f"mh_{b * _R + r}").cast("string")
-                    for r in range(_R)
-                ],
-            )
-            for b in range(_B)
-        ]
-    )
-    bands = sigs.select(
-        "doc_id", F.posexplode(band_keys).alias("band", "band_key")
-    )
-    buckets = bands.groupBy("band", "band_key").agg(
-        F.sort_array(F.collect_set("doc_id")).alias("ids")
-    )
-    lhs = buckets.filter(F.size("ids") > 1).select(
-        F.posexplode("ids").alias("i", "id_a"), "ids"
-    )
-    cands = (
-        lhs.select(
-            "id_a",
-            F.explode(
-                F.slice("ids", F.col("i") + F.lit(2), F.size("ids"))
-            ).alias("id_b"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)  # consumers: inter join + scored
-    )
-    sh = _shingles(docs, 3).localCheckpoint(
-        eager=False
-    )  # consumers: sizes + both exact-join sides
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        cands.join(sh.select(F.col("doc_id").alias("id_a"), "shingle"), "id_a")
-        .join(
-            sh.select(F.col("doc_id").alias("id_b"), "shingle"),
-            ["id_b", "shingle"],
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sigs.select(
-        F.col("doc_id").alias("id_a"),
-        *[F.col(f"mh_{i}").alias(f"a_{i}") for i in range(_NH)],
-    )
-    sb = sigs.select(
-        F.col("doc_id").alias("id_b"),
-        *[F.col(f"mh_{i}").alias(f"b_{i}") for i in range(_NH)],
-    )
-    agree = sum(
-        (F.col(f"a_{i}") == F.col(f"b_{i}")).cast("int") for i in range(_NH)
-    )
-    ni = F.coalesce(F.col("n_inter"), F.lit(0))
-    exact_jac = F.round(
-        ni.cast("double")
-        / (F.col("n_a") + F.col("n_b") - ni).cast("double"),
-        6,
-    )
-    scored = (
-        cands.join(inter, ["id_a", "id_b"], "left")
-        .join(
-            sizes.select(F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_a")),
-            "id_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("id_b"), F.col("n_sh").alias("n_b")),
-            "id_b",
-        )
-        .withColumn("exact_j", exact_jac)
-        .join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("est_j", agree.cast("double") / F.lit(float(_NH)))
+    scored = _minhash_scored_candidates(docs).select(
+        F.round(F.col("exact"), 6).alias("exact_j"), F.col("est").alias("est_j")
     )
     dec = lambda c: F.round(c, 8).cast("decimal(12,8)")  # noqa: E731
     n = F.count(F.lit(1))
@@ -2739,10 +2720,10 @@ def q_minhash_jaccard_err(spark: SparkSession, sf_dir: str) -> DataFrame:
     for every LSH candidate pair, the 16-component MinHash Jaccard
     ESTIMATE (matching components / 16) against the EXACT 3-shingle
     Jaccard, with the absolute error — the drill-down under
-    q_minhash_estimate_error's per-decile rollup (same candidates,
-    same estimator, same exact reference; a consistency test recounts
-    that rollup from THESE rows, so the two independently-implemented
-    audits police each other), and the companion to q_lsh_recall_audit
+    q_minhash_estimate_error's per-decile rollup (both read one
+    scored-candidate table, _minhash_scored_candidates; a consistency
+    test recounts that rollup from THESE rows), and the companion to
+    q_lsh_recall_audit
     (which pairs the bands surface vs how well the sketch scores
     them). The σ ≈ √(J(1−J)/16) envelope is pinned in tests.
 
@@ -2751,93 +2732,15 @@ def q_minhash_jaccard_err(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer shingle counts; a band-collision candidate with ZERO
     shared shingles keeps an exact 0 via the LEFT join + coalesce.
 
-    Scale shape: ONE signature pipeline (pinned — serves band keys AND
-    both estimate sides); candidates come from the banded buckets
-    (never all pairs); the exact-verify join touches only candidate
-    ids' shingle rows (pairs ⋈ shingles is candidate-bounded)."""
-    from flink_template_spark.functions.hashing import (
-        LSH_BANDS as _B,
-        NUM_HASHES as _H,
-        ROWS_PER_BAND as _R,
-    )
-    from flink_template_spark.operators.dedup import (
-        minhash_signatures,
-        shingle_rows,
-    )
-
+    Scale shape: see _minhash_scored_candidates — candidates come from
+    the banded buckets (never all pairs); the exact-verify join touches
+    only candidate ids' shingle rows (pairs ⋈ shingles is
+    candidate-bounded)."""
+    # abs_err is taken from the UNROUNDED exact Jaccard, as the oracle does
     docs = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signatures(docs).localCheckpoint(eager=False)
-    band_keys = F.array(
-        *[
-            F.concat_ws(
-                "_",
-                *[
-                    F.col(f"mh_{b * _R + r}").cast("string")
-                    for r in range(_R)
-                ],
-            )
-            for b in range(_B)
-        ]
-    )
-    bands = sigs.select(
-        "doc_id", F.posexplode(band_keys).alias("band", "band_key")
-    )
-    buckets = bands.groupBy("band", "band_key").agg(
-        F.sort_array(F.collect_set("doc_id")).alias("ids")
-    )
-    lhs = buckets.filter(F.size("ids") > 1).select(
-        F.posexplode("ids").alias("i", "id_a"), "ids"
-    )
-    cand = (
-        lhs.select(
-            "id_a",
-            F.explode(
-                F.slice("ids", F.col("i") + F.lit(2), F.size("ids"))
-            ).alias("id_b"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)  # consumers: est join + exact join
-    )
-    sh = shingle_rows(docs, 3).localCheckpoint(
-        eager=False
-    )  # consumers: sizes + both exact-join sides
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("ns"))
-    inter = (
-        cand.join(sh.select(F.col("doc_id").alias("id_a"), "shingle"), "id_a")
-        .join(
-            sh.select(F.col("doc_id").alias("id_b"), "shingle"),
-            ["id_b", "shingle"],
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("ni"))
-    )
-    a = sigs.select(
-        F.col("doc_id").alias("id_a"),
-        *[F.col(f"mh_{i}").alias(f"a_mh_{i}") for i in range(_H)],
-    )
-    b = sigs.select(
-        F.col("doc_id").alias("id_b"),
-        *[F.col(f"mh_{i}").alias(f"b_mh_{i}") for i in range(_H)],
-    )
-    match_terms = None
-    for i in range(_H):
-        t = F.when(F.col(f"a_mh_{i}") == F.col(f"b_mh_{i}"), 1).otherwise(0)
-        match_terms = t if match_terms is None else match_terms + t
-    est = match_terms / float(_H)
-    ni = F.coalesce(F.col("ni"), F.lit(0))
-    exact = ni.cast("double") / (F.col("a_ns") + F.col("b_ns") - ni)
+    est, exact = F.col("est"), F.col("exact")
     return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .join(inter, ["id_a", "id_b"], "left")
-        .join(
-            sizes.select(F.col("doc_id").alias("id_a"), F.col("ns").alias("a_ns")),
-            "id_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("id_b"), F.col("ns").alias("b_ns")),
-            "id_b",
-        )
+        _minhash_scored_candidates(docs)
         .select(
             "id_a",
             "id_b",

@@ -1155,10 +1155,11 @@ def q_contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     # Within-cell pair scoring via the blocked exact-fold kernel
-    # (optimization r13, operators.similarity.pair_cos_blocked): one
-    # task per cell scores every pair with the identical dot fold, and
-    # only the two bands the query consumes survive kernel-side (raw ≥
-    # POS−1e-6 OR raw ≤ NEG+1e-6, conservative for round-half-up) — the
+    # (optimization r13, operators.similarity.pair_cos_blocked): the
+    # cell's sub-block pairs score every pair with the identical dot
+    # fold, and only the two bands the query consumes survive
+    # kernel-side (raw ≥ POS−1e-6 OR raw ≤ NEG+1e-6, conservative for
+    # round-half-up) — the
     # old symmetric pair table paid one Arrow pair row + one BigDecimal
     # round per (anchor, other) ORDERED pair, discarded the whole
     # middle band afterwards, and its id-window checkpoint fed two

@@ -61,8 +61,17 @@ def test_semi_anti_join_physical(spark, sf):
 
 
 def test_minhash_no_cartesian(spark, sf):
+    import re as _re
+
     p = plan_of(plans.QUERIES["q_minhash_lsh_pairs"](spark, sf))
     assert "CartesianProduct" not in p  # banded LSH joins on (band, sig)
+    # the bucket pair expansion stays a generator over collected buckets
+    # (operators.dedup.bucket_pairs), never a bucket self-join: no join
+    # node; three exchanges (signature min, bucket collect, pair count)
+    # and four generators (shingles, bands, posexplode, sliced explode)
+    assert "Join" not in p
+    assert len(_re.findall(r"(?m)^\(\d+\) Exchange$", p)) == 3
+    assert len(_re.findall(r"(?m)^\(\d+\) Generate$", p)) == 4
 
 
 def test_lsh_near_dup_no_cartesian(spark, sf):

@@ -281,9 +281,10 @@ def test_pair_cos_blocked_bit_identical(spark, sf_dir):
     """pair_cos_blocked must emit bit-identical raw cosines to the
     per-pair fold join for EVERY unordered pair of valid vectors (the
     kernel replays dot's and l2_norm's exact folds), and
-    cosine_near_dup_exact(impl='blocked') must be row-identical to
-    impl='fold' at a permissive threshold. Mixed-width pairs drop like
-    the zip_with NULL fold."""
+    cosine_near_dup_exact must be row-identical to the fold join
+    rounded to 6 dp, thresholded and ordered by (id_a, id_b) at a
+    permissive threshold. Mixed-width pairs drop like the zip_with
+    NULL fold."""
     import struct
 
     from flink_template_spark.functions.vector import dot, l2_norm, valid_vec
@@ -293,24 +294,22 @@ def test_pair_cos_blocked_bit_identical(spark, sf_dir):
     )
     from flink_template_spark.tables import load_table
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    wn = emb.filter(valid_vec(F.col("embedding"))).select(
-        "vec_id", "embedding", l2_norm(F.col("embedding")).alias("n")
-    )
-    a = wn.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("va"),
-        F.col("n").alias("na"),
-    )
-    b = wn.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("vb"),
-        F.col("n").alias("nb"),
-    )
-    fold = {
-        (r.id_a, r.id_b): r.c
-        for r in a.join(b, F.col("id_a") < F.col("id_b"))
-        .select(
+    def fold_pairs(vectors):
+        """(id_a, id_b, raw cosine) by the per-pair JVM fold join."""
+        wn = vectors.filter(valid_vec(F.col("embedding"))).select(
+            "vec_id", "embedding", l2_norm(F.col("embedding")).alias("n")
+        )
+        a = wn.select(
+            F.col("vec_id").alias("id_a"),
+            F.col("embedding").alias("va"),
+            F.col("n").alias("na"),
+        )
+        b = wn.select(
+            F.col("vec_id").alias("id_b"),
+            F.col("embedding").alias("vb"),
+            F.col("n").alias("nb"),
+        )
+        return a.join(b, F.col("id_a") < F.col("id_b")).select(
             "id_a",
             "id_b",
             (
@@ -318,8 +317,18 @@ def test_pair_cos_blocked_bit_identical(spark, sf_dir):
                 / (F.col("na") * F.col("nb"))
             ).alias("c"),
         )
-        .collect()
-    }
+
+    def fold_near_dup(vectors, threshold):
+        return (
+            fold_pairs(vectors)
+            .select("id_a", "id_b", F.round(F.col("c"), 6).alias("cos_sim"))
+            .filter(F.col("cos_sim") >= threshold)
+            .orderBy("id_a", "id_b")
+            .collect()
+        )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    fold = {(r.id_a, r.id_b): r.c for r in fold_pairs(emb).collect()}
     kern = {
         (r.id_a, r.id_b): r.raw_cos
         for r in pair_cos_blocked(emb, -2.0).collect()
@@ -329,8 +338,8 @@ def test_pair_cos_blocked_bit_identical(spark, sf_dir):
     for key in fold:
         assert bits(fold[key]) == bits(kern[key]), key
 
-    got = cosine_near_dup_exact(emb, 0.30, impl="blocked").collect()
-    ref = cosine_near_dup_exact(emb, 0.30, impl="fold").collect()
+    got = cosine_near_dup_exact(emb, 0.30).collect()
+    ref = fold_near_dup(emb, 0.30)
     assert [tuple(r) for r in got] == [tuple(r) for r in ref]
 
     # mixed widths: only equal-width pairs score (zip_with pad -> NULL)
@@ -343,8 +352,8 @@ def test_pair_cos_blocked_bit_identical(spark, sf_dir):
         ],
         "vec_id long, embedding array<double>",
     )
-    got_m = cosine_near_dup_exact(mixed, -1.0, impl="blocked").collect()
-    ref_m = cosine_near_dup_exact(mixed, -1.0, impl="fold").collect()
+    got_m = cosine_near_dup_exact(mixed, -1.0).collect()
+    ref_m = fold_near_dup(mixed, -1.0)
     assert [tuple(r) for r in got_m] == [tuple(r) for r in ref_m]
     assert {(r.id_a, r.id_b) for r in got_m} == {(1, 2), (3, 4)}
 
