@@ -444,7 +444,11 @@ def semdedup(
     bit-identical (exact-fold kernel), F.round applied only to the
     ≥ threshold−1e-6 survivors. Row-identical by
     tests/test_r13_opt.py::test_semdedup_blocked_identical."""
-    assigned = ivf_assign(vectors, centroids, id_col=id_col, vec_col=vec_col)
+    # pinned: the pair kernel and the keep set's anti-join both read
+    # it, so ivf_assign's Arrow centroid pass runs once per vector
+    assigned = ivf_assign(
+        vectors, centroids, id_col=id_col, vec_col=vec_col
+    ).localCheckpoint(eager=False)
     raw = pair_cos_blocked(
         assigned,
         threshold - 1e-6,

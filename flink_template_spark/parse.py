@@ -322,7 +322,7 @@ def parse_trip_events(
 def read_trip_events_json(spark, path: str) -> DataFrame:
     """Batch file source: JSON lines → parsed trip events (reference's
     Kafka source S1 swapped for files; same downstream plan)."""
-    raw = spark.read.text(path).withColumnRenamed("value", "value")
+    raw = spark.read.text(path)
     return parse_trip_events(raw)
 
 

@@ -540,8 +540,9 @@ def compact_parquet(
     actual on-disk size (one cheap metadata pass, no data read);
     coalesce() avoids a shuffle when only merging, repartitionByRange
     re-clusters when ``cluster_by`` is given. Writes to ``dst`` —
-    atomic swap is the caller's rename, mirroring compact_rollup's
-    write-then-delete ordering. Returns the target file count."""
+    atomic swap is the caller's rename (streaming.changelog's
+    compact_state shows a crash-safe one). Returns the target file
+    count."""
     import glob as _glob
 
     total = sum(

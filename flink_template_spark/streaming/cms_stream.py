@@ -3,7 +3,8 @@
 The frequency dual of streaming.sketch_stream's KMV changelog: each
 micro-batch computes its OWN CMS counter table per cell
 (≤ d·w = 4096 rows per touched cell, operators.sketches_portable) and
-appends it epoch-stamped; readers union the changelog and SUM-merge.
+writes it to the epoch changelog; readers SUM-merge the base and the
+unfolded epochs.
 
 Why this is exactly right for CMS: counter union IS addition — sums
 commute and associate, so the stream-maintained sketch is BIT-IDENTICAL
@@ -14,17 +15,14 @@ back into a base of ≤ d·w rows per cell. Heavy-hitter queries
 (estimate counts for a candidate key set) read kilobytes regardless of
 stream history.
 
-Crash-safety: counter addition is NOT idempotent, so this module rides
-the counter-safe changelog contract in streaming.changelog (one base +
-folded-epochs sidecar; see that module's docstring for the full
-invariant and why the KMV read-everything rule would double-count
-here). Both compaction crash windows are pinned by tests against the
-exact batch counters.
+Crash-safety: counter addition is NOT idempotent, so a re-read epoch
+would double-count; streaming.changelog's one-base + folded-epochs
+read rule enters each epoch exactly once (see that module's docstring).
+Both compaction crash windows are pinned by tests against the exact
+batch counters.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -36,6 +34,7 @@ from flink_template_spark.operators.sketches_portable import (
 from flink_template_spark.streaming.changelog import (
     compact_state,
     read_state,
+    start_changelog_writer,
 )
 
 _COLS = ["i", "pos", "cnt"]
@@ -52,37 +51,23 @@ def write_cms_stream(
     item_expr: str = "user_id",
     available_now: bool = False,
 ):
-    """Start the counter changelog writer: append mode; each epoch
-    directory holds that micro-batch's merged counter rows.
-    Overwrite-by-epoch keeps a foreachBatch retry idempotent."""
-
-    def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        sk = cms_counters(batch_df, [], item_expr)
-        (
-            sk.repartition(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(sketch_dir, "changelog", f"epoch={epoch_id}"))
-        )
-
-    writer = (
-        events.writeStream.outputMode("append")
-        .foreachBatch(write_epoch)
-        .option("checkpointLocation", checkpoint)
+    """Start the counter changelog writer: each epoch directory holds
+    that micro-batch's merged counter rows."""
+    return start_changelog_writer(
+        events,
+        sketch_dir,
+        checkpoint,
+        lambda batch: cms_counters(batch, [], item_expr),
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_cms(spark: SparkSession, sketch_dir: str) -> DataFrame:
     """The merged (i, pos, cnt) counter table over everything seen —
     identical to the batch sketch (counter addition commutes; the
-    counter-safe read rule guarantees each count enters the sum exactly
+    changelog's read rule guarantees each count enters the sum exactly
     once at every crash point)."""
-    try:
-        return read_state(spark, sketch_dir, _COLS, _merge)
-    except FileNotFoundError:
-        raise FileNotFoundError(f"no CMS sketch data under {sketch_dir}")
+    return read_state(spark, sketch_dir, _COLS, _merge)
 
 
 def estimate_counts(
@@ -96,6 +81,6 @@ def estimate_counts(
 def compact_cms(spark: SparkSession, sketch_dir: str) -> None:
     """Fold the chosen base ∪ unfolded epochs into a new base snapshot:
     cms_merge IS the compaction, read amplification returns to ≤ d·w
-    rows; the swap is streaming.changelog's counter-safe sidecar dance
-    (crash windows pinned by tests)."""
+    rows; the swap is streaming.changelog's (crash windows pinned by
+    tests)."""
     compact_state(spark, sketch_dir, _COLS, _merge)

@@ -9,11 +9,11 @@ maintained fingerprint is bit-identical to the batch fingerprint over
 the full history — the property that lets a replication target verify
 itself against the source continuously instead of with a full rescan.
 
-XOR/SUM state is ADDITIVE (not idempotent), so this module rides the
-counter-safe changelog contract in streaming.changelog — one base +
-folded-epochs sidecar, every compaction crash point replays to the
-exact fingerprints (the machinery's crash windows are pinned by the
-CMS tests; the stream==batch equality here is pinned by
+XOR/SUM state is ADDITIVE (not idempotent); streaming.changelog's
+one-base + folded-epochs read rule enters each epoch exactly once, so
+every compaction crash point reads the exact fingerprints (the
+changelog's crash windows are pinned by the CMS tests; the
+stream==batch equality here is pinned by
 tests/test_fingerprint_stream.py).
 
 Scale shape: per epoch the writer ships |sources-in-batch| rows; the
@@ -24,14 +24,13 @@ shape of the batch query.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_template_spark.streaming.changelog import (
     compact_state,
     read_state,
+    start_changelog_writer,
 )
 
 _COLS = ["source", "n_rows", "xor_fp", "sum_fp"]
@@ -70,37 +69,19 @@ def write_fingerprint_stream(
     checkpoint: str,
     available_now: bool = False,
 ):
-    """Start the fingerprint changelog writer (append mode; one
-    overwrite-by-epoch directory per micro-batch — retry-idempotent)."""
-
-    def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            _batch_fingerprints(batch_df)
-            .repartition(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(state_dir, "changelog", f"epoch={epoch_id}"))
-        )
-
-    writer = (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(write_epoch)
-        .option("checkpointLocation", checkpoint)
+    """Start the fingerprint changelog writer (one overwrite-by-epoch
+    directory per micro-batch — retry-idempotent)."""
+    return start_changelog_writer(
+        docs, state_dir, checkpoint, _batch_fingerprints, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_fingerprints(spark: SparkSession, state_dir: str) -> DataFrame:
     """(source, n_rows, xor_fp, sum_fp) over everything ingested —
     bit-identical to the batch fingerprint of the same rows."""
-    try:
-        return read_state(spark, state_dir, _COLS, _merge)
-    except FileNotFoundError:
-        raise FileNotFoundError(f"no fingerprint state under {state_dir}")
+    return read_state(spark, state_dir, _COLS, _merge)
 
 
 def compact_fingerprints(spark: SparkSession, state_dir: str) -> None:
-    """Fold the changelog into a |sources|-row base snapshot under the
-    counter-safe sidecar contract."""
+    """Fold the changelog into a |sources|-row base snapshot."""
     compact_state(spark, state_dir, _COLS, _merge)

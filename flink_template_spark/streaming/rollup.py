@@ -1,35 +1,42 @@
 """Continuous aggregate (hypertable-style rollup) maintained by a stream.
 
-The pattern: a streaming windowed aggregation in *update* mode feeds a
-``foreachBatch`` writer that appends each micro-batch's changed window
-rows to a changelog directory, stamped with the epoch. Readers resolve
-"latest epoch wins" per window key; a compaction pass periodically folds
-the changelog into a base snapshot so read amplification stays O(1).
+The pattern: a streaming windowed aggregation in *update* mode feeds
+the epoch changelog of streaming.changelog: each micro-batch overwrites
+``changelog/epoch=N`` with the window rows it changed. Readers resolve
+"latest epoch wins" per window key; compaction folds the changelog
+into a one-file base snapshot so read amplification stays O(1).
 
 This is the timeseries-DB "continuous aggregate" re-expressed on object
 storage + Structured Streaming:
 
-- the *writer* never rewrites history — appends only, so it is safe
-  under at-least-once foreachBatch retries (an epoch re-run overwrites
-  its own directory, which is idempotent);
-- the *reader* is a plain DataFrame over changelog ∪ base with a
-  per-key ``row_number`` — no external metastore;
-- *compaction* is an offline rewrite, exactly how delta/iceberg handle
-  the same problem, but with zero dependencies beyond parquet.
+- the *writer* never rewrites history, and an epoch re-run (an
+  at-least-once foreachBatch retry) overwrites its own directory;
+- the *reader* is a plain DataFrame over the base and the unfolded
+  epochs with a per-key ``row_number`` — no external metastore. Base
+  rows carry epoch -1, so any unfolded changelog row supersedes them;
+- *compaction* is an offline rewrite under the changelog's one-base +
+  folded-epochs rule: every crash point reads the exact pre-crash
+  state, and a re-run heals the layout.
 
 Scale: each epoch directory holds only the windows touched by that
-micro-batch (bounded by watermark + arrival skew, not by history), the
-reader's window function partitions by window key (no global shuffle),
-and compaction turns N epochs of updates into one range-partitioned
-base. State in the streaming agg itself is bounded by the watermark.
+micro-batch (bounded by watermark + arrival skew, not by history), and
+the reader's window function partitions by window key (no global
+shuffle). State in the streaming agg itself is bounded by the
+watermark.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from flink_template_spark.streaming.changelog import (
+    compact_state,
+    read_state,
+    start_changelog_writer,
+)
+
+_COLS = ["bucket_start", "event_type", "n_events", "sum_value"]
 
 
 def rollup_updates(events: DataFrame, bucket: str = "1 hour",
@@ -59,65 +66,15 @@ def rollup_updates(events: DataFrame, bucket: str = "1 hour",
 
 def write_rollup_stream(updates: DataFrame, rollup_dir: str, checkpoint: str,
                         available_now: bool = False):
-    """Start the changelog writer: update-mode stream → per-epoch append.
-
-    Epoch re-runs (at-least-once retries) rewrite the same
-    ``epoch=N`` directory — overwrite-by-partition keeps it idempotent.
-    """
-
-    def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        # the epoch rides in the directory name; readers get it back as
-        # an inferred partition column
-        (
-            batch_df.repartition(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(rollup_dir, "changelog", f"epoch={epoch_id}"))
-        )
-
-    writer = (
-        updates.writeStream.outputMode("update")
-        .foreachBatch(write_epoch)
-        .option("checkpointLocation", checkpoint)
+    """Start the changelog writer: each epoch directory holds the
+    window rows that micro-batch changed."""
+    return start_changelog_writer(
+        updates, rollup_dir, checkpoint, lambda batch: batch, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
-def _read_optional(spark: SparkSession, path: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(path)
-    except Exception:
-        return None  # directory absent → treat as empty
-
-
-def read_rollup(
-    spark: SparkSession, rollup_dir: str, as_of_epoch: int | None = None
-) -> DataFrame:
-    """Resolve the current rollup: base snapshot ∪ changelog, latest
-    epoch per (bucket_start, event_type) wins. Base rows carry epoch -1
-    so any changelog row supersedes them.
-
-    ``as_of_epoch`` gives snapshot (time-travel) reads: only changelog
-    epochs ≤ it participate, reproducing the table as of that commit —
-    the changelog IS the history, so this costs a partition filter, not
-    a copy. (Epoch directories pruned by partition filter; only valid
-    before compaction folds them away.)"""
-    parts = []
-    base = _read_optional(spark, os.path.join(rollup_dir, "base"))
-    if base is not None:
-        parts.append(base.withColumn("epoch", F.lit(-1).cast("long")))
-    log = _read_optional(spark, os.path.join(rollup_dir, "changelog"))
-    if log is not None:
-        log = log.withColumn("epoch", F.col("epoch").cast("long"))
-        if as_of_epoch is not None:
-            log = log.filter(F.col("epoch") <= as_of_epoch)
-        parts.append(log)
-    if not parts:
-        raise FileNotFoundError(f"no rollup data under {rollup_dir}")
-    union = parts[0]
-    for p in parts[1:]:
-        union = union.unionByName(p)
+def _latest(union: DataFrame) -> DataFrame:
+    """Latest epoch wins per (bucket_start, event_type)."""
     latest = Window.partitionBy("bucket_start", "event_type").orderBy(
         F.col("epoch").desc()
     )
@@ -128,27 +85,27 @@ def read_rollup(
     )
 
 
+def read_rollup(
+    spark: SparkSession, rollup_dir: str, as_of_epoch: int | None = None
+) -> DataFrame:
+    """Resolve the current rollup: the base and the unfolded changelog
+    epochs, latest epoch per (bucket_start, event_type) wins. A present
+    but unreadable base raises.
+
+    ``as_of_epoch`` gives snapshot (time-travel) reads: only changelog
+    epochs ≤ it participate, reproducing the table as of that commit —
+    the changelog IS the history, so this costs a partition filter, not
+    a copy. (Only valid before compaction folds those epochs away.)"""
+
+    def merge(union: DataFrame) -> DataFrame:
+        if as_of_epoch is not None:
+            union = union.filter(F.col("epoch") <= as_of_epoch)
+        return _latest(union)
+
+    return read_state(spark, rollup_dir, _COLS, merge)
+
+
 def compact_rollup(spark: SparkSession, rollup_dir: str) -> None:
-    """Fold the changelog into the base snapshot (offline maintenance).
-
-    The new base is range-partitioned on bucket_start so time-range
-    reads prune files. Changelog epochs are only removed after the new
-    base is fully written (write-then-delete ordering: a crash between
-    the two steps leaves duplicates that the reader resolves, never
-    data loss)."""
-    import shutil
-
-    resolved = read_rollup(spark, rollup_dir)
-    tmp = os.path.join(rollup_dir, "base_new")
-    (
-        resolved.repartitionByRange(4, "bucket_start")
-        .write.mode("overwrite")
-        .parquet(tmp)
-    )
-    base = os.path.join(rollup_dir, "base")
-    if os.path.exists(base):
-        shutil.rmtree(base)
-    os.rename(tmp, base)
-    log = os.path.join(rollup_dir, "changelog")
-    if os.path.exists(log):
-        shutil.rmtree(log)
+    """Fold the changelog into the base snapshot (offline maintenance)
+    under the changelog's crash-safe swap."""
+    compact_state(spark, rollup_dir, _COLS, _latest)

@@ -2,10 +2,9 @@
 
 The streaming dual of operators.sketches_portable.kmv_*: each
 micro-batch computes its OWN k-minimum-values sketch per cell (≤ k
-rows) and appends it to an epoch-stamped changelog directory — the
-same append-only/overwrite-by-epoch contract as streaming.rollup, so
-at-least-once foreachBatch retries stay idempotent. Readers union the
-changelog and ``kmv_merge`` it back to one sketch per cell.
+rows) and writes it to the epoch changelog of streaming.changelog;
+readers ``kmv_merge`` the base and the unfolded epochs back to one
+sketch per cell, and compaction is the same merge into a new base.
 
 Why this is exactly right for sketches: KMV union is LOSSLESS BY
 VALUE (the k smallest of a union is a subset of each side's k
@@ -13,8 +12,8 @@ smallest — proven in tests/test_sketches), so the stream-maintained
 sketch is BIT-IDENTICAL to the sketch a batch job would build over
 all events ever seen. No approximation drift accumulates across
 epochs, estimates (and their union/intersection algebra) keep their
-oracle-exact arithmetic, and compaction is just kmv_merge of epochs
-into a base — kilobytes per cell regardless of stream history.
+oracle-exact arithmetic, and a compacted base is kilobytes per cell
+regardless of stream history.
 
 Scale: per epoch the writer ships ≤ k rows per touched cell; reader
 cost is (epochs × k) rows per cell until compaction. State lives in
@@ -24,16 +23,18 @@ for correctness (distinct-ness is order-insensitive).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from flink_template_spark.operators.sketches_portable import (
     KMV_K,
     kmv_estimate,
     kmv_merge,
     kmv_sketch,
+)
+from flink_template_spark.streaming.changelog import (
+    compact_state,
+    read_state,
+    start_changelog_writer,
 )
 
 
@@ -46,39 +47,15 @@ def write_kmv_stream(
     k: int = KMV_K,
     available_now: bool = False,
 ):
-    """Start the sketch changelog writer: append mode; each epoch
-    directory holds that micro-batch's per-cell KMV sketch rows."""
-
-    def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        sk = kmv_sketch(batch_df, [cell_col], item_col, k=k)
-        (
-            sk.repartition(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(sketch_dir, "changelog", f"epoch={epoch_id}"))
-        )
-
-    writer = (
-        events.writeStream.outputMode("append")
-        .foreachBatch(write_epoch)
-        .option("checkpointLocation", checkpoint)
+    """Start the sketch changelog writer: each epoch directory holds
+    that micro-batch's per-cell KMV sketch rows."""
+    return start_changelog_writer(
+        events,
+        sketch_dir,
+        checkpoint,
+        lambda batch: kmv_sketch(batch, [cell_col], item_col, k=k),
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def _read_optional(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read a local sketch directory, or None if it does not exist.
-
-    Only the missing-path case is treated as empty (os-level existence
-    check — the sketch dirs are local paths by contract, same as the
-    rollup sink). Any OTHER read failure (permissions, corrupt footer,
-    transient FS error) propagates: silently returning None there would
-    make read_kmv build estimates from the changelog alone and
-    undercount (ADVICE r5)."""
-    if not os.path.exists(path):
-        return None
-    return spark.read.parquet(path)
 
 
 def read_kmv(
@@ -87,119 +64,19 @@ def read_kmv(
     cell_col: str = "event_type",
     k: int = KMV_K,
 ) -> DataFrame:
-    """(cell, n_h, theta, est): merge base ∪ every changelog epoch and
-    estimate — identical to the batch sketch over all events seen.
-    Sketch union is idempotent and commutative, so base/base_old/
-    changelog duplicates (a crash anywhere inside compaction's
-    rename dance) merge away instead of double-counting. ``base_old``
-    exists only in compact_kmv's crash window where ``base`` has been
-    renamed aside but the new base is not yet in place — reading it
-    makes every crash point recoverable (ADVICE r5)."""
-    union = _union_sketch_parts(spark, sketch_dir, cell_col)
-    if union is None:
-        raise FileNotFoundError(f"no KMV sketch data under {sketch_dir}")
-    merged = kmv_merge(union, [cell_col], k=k)
+    """(cell, n_h, theta, est): merge the base and the unfolded epochs
+    and estimate — identical to the batch sketch over all events seen.
+    A present but unreadable base raises."""
+    merged = read_state(
+        spark, sketch_dir, [cell_col, "h"], lambda u: kmv_merge(u, [cell_col], k=k)
+    )
     return kmv_estimate(merged, [cell_col], k=k)
-
-
-def _union_sketch_parts(
-    spark: SparkSession, sketch_dir: str, cell_col: str
-) -> DataFrame | None:
-    return union_parts(spark, sketch_dir, [cell_col, "h"])
-
-
-def union_parts(
-    spark: SparkSession, sketch_dir: str, cols: list[str]
-) -> DataFrame | None:
-    """Union every extant sketch source: base, base_old (compaction
-    crash window), changelog. Never reads ``base_new`` — at every crash
-    point its content is still fully covered by base/base_old+changelog,
-    and a crash DURING its parquet write can leave it partial.
-
-    SET-SEMANTICS SKETCHES ONLY (KMV/theta: rows are distinct hashes,
-    so re-reading a superseded part is harmless). Counter sketches must
-    NOT use this read rule — counter addition is not idempotent, and
-    reading base + base_old + changelog double-counts folded epochs in
-    the compaction crash window; streaming.cms_stream implements the
-    counter-safe one-base + folded-epochs-sidecar rule instead."""
-    parts = [
-        df.select(*cols)
-        for df in (
-            _read_optional(spark, os.path.join(sketch_dir, "base")),
-            _read_optional(spark, os.path.join(sketch_dir, "base_old")),
-            _read_optional(spark, os.path.join(sketch_dir, "changelog")),
-        )
-        if df is not None
-    ]
-    if not parts:
-        return None
-    union = parts[0]
-    for p in parts[1:]:
-        union = union.unionAll(p)
-    return union
-
-
-def swap_base(sketch_dir: str, merged: DataFrame) -> None:
-    """The crash-recoverable base swap for SET-SEMANTICS sketch
-    changelogs (see union_parts): write ``merged`` (caller must have
-    pinned it with localCheckpoint — the renames below invalidate its
-    input paths) to base_new, rename base aside to base_old, rename
-    base_new into place, then delete base_old and the changelog.
-
-    base_old is only ever removed while a base DIRECTORY exists
-    (either the old base that supersedes it, or the freshly renamed
-    merged one that contains it). In the healing path — a prior crash
-    left {base_old, changelog} with NO base — the stale base_old is
-    the only copy of compacted history, so it must survive until
-    base_new has been renamed in; deleting it first would strand that
-    history in base_new, which no reader consults, and the next
-    compaction's overwrite of base_new would destroy it (r6 review).
-    Every crash point leaves the full state readable from
-    {base, base_old, changelog} and a re-run heals the layout."""
-    import shutil
-
-    base = os.path.join(sketch_dir, "base")
-    base_old = os.path.join(sketch_dir, "base_old")
-    base_new = os.path.join(sketch_dir, "base_new")
-    # a partial base_new from a prior crash needs no explicit cleanup:
-    # mode("overwrite") below replaces the directory wholesale
-    merged.repartition(1).write.mode("overwrite").parquet(base_new)
-    if os.path.exists(base):
-        # a stale base_old is superseded by base (and by merged):
-        # clear it so the rename-aside cannot collide
-        if os.path.exists(base_old):
-            shutil.rmtree(base_old)
-        os.rename(base, base_old)
-    os.rename(base_new, base)
-    if os.path.exists(base_old):
-        shutil.rmtree(base_old)
-    log = os.path.join(sketch_dir, "changelog")
-    if os.path.exists(log):
-        shutil.rmtree(log)
 
 
 def compact_kmv(spark: SparkSession, sketch_dir: str, cell_col: str = "event_type",
                 k: int = KMV_K) -> None:
-    """Fold base ∪ changelog into a new base snapshot OUTSIDE the
-    epoch namespace (the streaming.rollup compaction discipline):
-    kmv_merge IS the compaction — the merged sketch is the exact union
-    state, so read amplification returns to k rows per cell.
-
-    Rename-aside ordering (ADVICE r5 — the old delete-before-rename
-    had a window where compacted history lived ONLY in base_new, which
-    no reader consulted): (1) merge base ∪ base_old ∪ changelog and
-    write it to base_new; (2) rename base aside to base_old; (3) rename
-    base_new into place as base; (4) only then delete base_old and the
-    changelog. At every crash point the full state is readable from
-    {base, base_old, changelog} (see _union_sketch_parts) and the next
-    compaction folds whatever survives — never data loss. Keeping the
-    base out of the epoch=N namespace also means a restarted stream
-    whose checkpoint was lost (epoch ids reset to 0) can never
-    overwrite compacted history."""
-    union = _union_sketch_parts(spark, sketch_dir, cell_col)
-    if union is None:
-        return
-    # Pin the merged rows BEFORE any renames below invalidate the lazy
-    # plan's input paths.
-    merged = kmv_merge(union, [cell_col], k=k).localCheckpoint()
-    swap_base(sketch_dir, merged)
+    """Fold the changelog into a new base snapshot: kmv_merge IS the
+    compaction, so read amplification returns to k rows per cell."""
+    compact_state(
+        spark, sketch_dir, [cell_col, "h"], lambda u: kmv_merge(u, [cell_col], k=k)
+    )

@@ -120,7 +120,7 @@ def test_kmv_healing_compaction_crash_keeps_base_old(
     and the next compaction must fold it (base_new is never read)."""
     import shutil
 
-    import flink_template_spark.streaming.sketch_stream as SS
+    import flink_template_spark.streaming.changelog as CL
 
     in_dir = tmp_path / "in"
     sk_dir = tmp_path / "sk"
@@ -151,19 +151,19 @@ def test_kmv_healing_compaction_crash_keeps_base_old(
     shutil.move(str(sk_dir / "base"), str(sk_dir / "base_old"))
     want2 = sorted(map(key, read_kmv(spark, str(sk_dir)).collect()))
 
-    real_rename = SS.os.rename
+    real_rename = CL.os.rename
 
     def crashing_rename(src, dst):
         if str(src).endswith("base_new"):
             raise RuntimeError("simulated crash before base_new rename")
         return real_rename(src, dst)
 
-    monkeypatch.setattr(SS.os, "rename", crashing_rename)
+    monkeypatch.setattr(CL.os, "rename", crashing_rename)
     import pytest as _pytest
 
     with _pytest.raises(RuntimeError, match="simulated crash"):
         compact_kmv(spark, str(sk_dir))
-    monkeypatch.setattr(SS.os, "rename", real_rename)
+    monkeypatch.setattr(CL.os, "rename", real_rename)
 
     # the fix's guarantee: base_old survived the crashed healing run
     assert (sk_dir / "base_old").exists()

@@ -607,6 +607,16 @@ def test_semdedup_pair_join_is_cluster_keyed(spark, sf):
     )
 
 
+def test_semdedup_reads_one_pinned_assignment(spark, sf):
+    """The pair kernel and the keep set's anti-join both read the
+    centroid-assigned vectors. They read one lazily pinned copy, so
+    ivf_assign's Arrow centroid pass runs once per vector, into the pin,
+    and appears nowhere in the query's plan."""
+    p = plan_of(plans.QUERIES["q_semdedup_keep"](spark, sf))
+    assert "ArrowEvalPython" not in p
+    assert "Scan ExistingRDD" in p
+
+
 def test_pii_scrub_is_map_only(spark, sf):
     """The PII pass must ride a scan for free: zero exchanges, regex in
     the projection."""
