@@ -1,8 +1,8 @@
 """Text-analysis Column-expression builders (all JVM-side built-ins — no
 Python UDFs in the hot path; these run inside whole-stage codegen).
 
-Used by the LLM-data-pipeline operators: dedup shingling, token
-counting, quality scoring, language heuristics, fingerprinting.
+Used by the LLM-data-pipeline operators: token counting, quality
+scoring, language heuristics, fingerprinting.
 """
 
 from __future__ import annotations
@@ -19,24 +19,6 @@ STOPWORDS = ["the", "a"]
 def ws_tokens(text: Column) -> Column:
     """Whitespace tokenization (single-space split, matching oracle)."""
     return F.split(text, " ")
-
-
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct n-word shingles; empty array when fewer than n tokens.
-
-    Pure array expressions (split/transform/sequence) — distributes with
-    the row, no shuffle, no UDF.
-    """
-    toks = ws_tokens(text)
-    joined = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - n),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, (i + j + 1).cast("int")) for j in range(n)]
-        ),
-    )
-    return F.when(F.size(toks) >= n, F.array_distinct(joined)).otherwise(
-        F.array().cast("array<string>")
-    )
 
 
 def token_count_ws(text: Column) -> Column:

@@ -7,9 +7,9 @@ frequency table (Zipf: orders of magnitude smaller than the corpus), so
 
 - one corpus-sized shuffle builds (word, count);
 - each merge round then runs on the vocab table only: adjacent-pair
-  counts via a map-side zip_with over off-by-one array slices (weighted
-  by word count, map-side partial agg — no per-round word-keyed
-  exchange), top pairs to the driver (a few rows),
+  counts from the symbol arrays' map-side 2-grams (weighted by word
+  count, map-side partial agg — no per-round word-keyed exchange), top
+  pairs to the driver (a few rows),
   merge application via an Arrow-batched ``mapInPandas`` over vocab
   rows (Python does O(symbols-per-word) work per DISTINCT word, never
   per corpus token).
@@ -32,6 +32,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from flink_template_spark.operators.dedup import ngram_rows
 
 END_MARK = "</w>"  # word-final marker, standard BPE
 
@@ -62,31 +64,14 @@ def _symbolize(words: DataFrame) -> DataFrame:
 def _pair_counts(vocab: DataFrame) -> DataFrame:
     """Adjacent-symbol pair counts weighted by word frequency.
 
-    Adjacent pairs come from zip_with over the two off-by-one slices of
-    the symbol array — entirely map-side — instead of the previous
-    posexplode + word-partitioned lead window, which paid a full
-    word-keyed Exchange + sort PER MERGE ROUND just to look one
-    position ahead inside an array it already had (optimization r12,
-    guide §2.4: remove shuffles outright). Same (a, b) multiset per
-    word: slice(syms, 1, n-1) zipped with slice(syms, 2, n-1); a
-    single-symbol word yields empty slices → no pairs, exactly like
-    the old NULL-lead filter. The one remaining exchange is the
-    (a, b)-keyed count agg with map-side partials."""
-    # greatest(n-1, 0): slice() with a NEGATIVE length is a runtime
-    # error, so an empty syms array (unreachable today — _symbolize
-    # always appends END_MARK — but cheap to guard) degrades to zero
-    # pairs like the old NULL-lead filter instead of failing the job.
-    n = F.greatest(F.size("syms") - 1, F.lit(0))
-    pairs = vocab.select(
-        "cnt",
-        F.explode(
-            F.zip_with(
-                F.slice(F.col("syms"), F.lit(1), n),
-                F.slice(F.col("syms"), F.lit(2), n),
-                lambda x, y: F.struct(x.alias("a"), y.alias("b")),
-            )
-        ).alias("p"),
-    ).select("cnt", F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+    Pairs are the symbol array's 2-grams from ``ngram_rows``, entirely
+    map-side: no word-keyed exchange and sort per merge round (the old
+    posexplode + lead-window form paid one just to look one position
+    ahead), and a single-symbol word yields no pairs. The one exchange
+    is the (a, b)-keyed count agg with map-side partials."""
+    pairs = ngram_rows(vocab, F.col("syms"), 2, "cnt").select(
+        "cnt", F.col("g")[0].alias("a"), F.col("g")[1].alias("b")
+    )
     return pairs.groupBy("a", "b").agg(F.sum("cnt").alias("pair_cnt"))
 
 

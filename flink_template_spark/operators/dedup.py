@@ -19,7 +19,7 @@ No Python UDFs — everything is Catalyst expressions.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from flink_template_spark.functions.hashing import (
@@ -39,15 +39,50 @@ def exact_dup_groups(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
     )
 
 
-def _spread(docs: DataFrame) -> DataFrame:
+def _spread(df: DataFrame) -> DataFrame:
     """Repartition to the session's parallelism before CPU-heavy
-    per-row work. The testdata tables are single parquet files → one
-    input split → the shingle/hash expressions would otherwise run on
-    one core. At lake scale inputs have many splits and this collapses
-    into AQE's normal coalescing (a 1-column-key-free round-robin
-    shuffle of the raw docs is negligible next to the hashing)."""
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    return docs.repartition(par)
+    per-row work (shingle hashing, vector math). The testdata tables
+    are single parquet files → one input split → the expressions would
+    otherwise run on one core. At lake scale inputs have many splits
+    and this collapses into AQE's normal coalescing (a key-free
+    round-robin shuffle of the raw rows is negligible next to the
+    per-row work)."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+
+def ngram_rows(
+    df: DataFrame, toks: Column, n: int, *cols: str, tails: bool = False
+) -> DataFrame:
+    """(cols..., pos, g) rows: ``g = slice(toks, pos + 1, n)`` for every
+    0-based start index ``pos`` of the array ``toks``. The one n-gram
+    builder: every word, symbol and character n-gram in the engine
+    comes from it.
+
+    One explode of ``sequence(0, size - n)`` and one codegen ``slice``
+    per start: no window (the old posexplode + ``lead`` form paid an
+    id-keyed exchange and a per-doc sort to look n-1 positions ahead
+    in an array it already had), no ``arrays_zip`` of n slice copies
+    and no lambda. Complete-gram callers ``array_join`` the slice.
+
+    ``tails=True`` starts a gram at EVERY position, so the last n-1
+    grams are shorter than n: the up-to-n window that callers needing
+    tail positions (1/2/3-grams of one pass, skip-gram offsets) read
+    slot by slot with ``F.get``, which is NULL past the end where
+    ``g[k]`` would raise under ANSI.
+
+    Arrays too short for a first gram are filtered BEFORE the generate:
+    ``sequence(0, -1)`` counts down to ``[0, -1]`` instead of being
+    empty. A NULL array has no size, so NULL text yields no rows."""
+    k = 1 if tails else n
+    arr = df.select(*cols, toks.alias("__toks")).filter(F.size("__toks") >= k)
+    starts = arr.select(
+        *cols,
+        "__toks",
+        F.explode(F.sequence(F.lit(0), F.size("__toks") - k)).alias("pos"),
+    )
+    return starts.select(
+        *cols, "pos", F.slice("__toks", F.col("pos") + 1, F.lit(n)).alias("g")
+    )
 
 
 def shingle_rows(
@@ -58,88 +93,26 @@ def shingle_rows(
     distinct: bool = True,
     extra_cols: list[str] | None = None,
     keep_pos: bool = False,
-    builder: str = "zip",
 ) -> DataFrame:
-    """Exploded (id, shingle) word n-gram rows, built MAP-SIDE in codegen.
+    """Exploded (id, shingle) word n-gram rows, built map-side by
+    ``ngram_rows`` over the single-space token split: each shingle is
+    its n-token slice joined by one space, ``pos`` its 0-based first
+    token. A doc with fewer than n tokens yields no rows.
 
-    Each shingle comes from ``arrays_zip`` over the n off-by-one slices
-    of the token array (the BPE `_pair_counts` shape generalized to n) —
-    posexplode of the zipped structs, then one ``concat_ws``. Every
-    operator here (split / slice / arrays_zip / posexplode / concat_ws)
-    is a regular codegen expression, NOT an interpreted HOF lambda, so
-    this keeps the codegen property that made the old explode+window
-    form beat ``transform``-built shingle arrays (~6× at sf0.1) — while
-    removing the old form's id-keyed Exchange + per-doc sort entirely
-    (optimization r13, guide §2.4: it paid a full shuffle of every
-    TOKEN row just to look n−1 positions ahead inside an array it
-    already had). Consumers that aggregate by id now see map-side
-    partials with NO pre-shuffle (minhash), and shingle-keyed consumers
-    shuffle aggregated shingle rows instead of raw tokens (§2.3).
-
-    Shingle strings are byte-identical to the window form (same
-    single-space ``concat_ws`` over the same token runs; a doc with
-    fewer than n tokens yields no rows via the greatest(len-n+1, 0)
-    slice bound, exactly like the old NULL-lead filter), so all oracles
-    are unaffected; ``pos`` keeps the same 0-based first-token position
-    posexplode produced. Differential pin:
-    tests/test_r13_opt.py::test_shingle_rows_zip_matches_window_lead.
-
-    ``distinct=True`` keeps the old form's id-clustered output topology
-    (an explicit id repartition the dedup aggregation and every
-    downstream id-keyed window/agg reuse) — the first A/B of the pure
-    map-side form regressed the prefix-filter family 12-56% because
-    those consumers branch the shingle set several ways and each branch
-    re-paid the clustering the window used to establish once. Same
-    exchange count as the window form, minus its per-doc sort + two
-    lead windows. ``distinct=False`` consumers aggregate immediately
-    (minhash min, winnowing min-by-window... which re-keys anyway), so
-    they get the fully map-side form with NO pre-shuffle.
-
-    ``builder="window"`` keeps the pre-r13 posexplode + id-window lead
-    formulation. Two call sites measured FASTER on it and stay pinned
-    there (min-of-5 A/B at sf0.1, r13): sorted_neighborhood_pairs'
-    verification (window 1.79 s vs zip 2.21 s query wall — the subtree
-    is consumed on BOTH verify-join sides and the window form's
-    exchange is the reuse point) and q_decontaminate_bloom's n=5
-    checkpointed table (1.28 vs 1.53 s — five slice copies per row
-    outweigh the saved sort in an eagerly-materialized build). Both
-    forms emit row-identical output (the differential pin covers the
-    pair), so the choice is pure topology.
+    ``distinct=True`` clusters the rows by id before the distinct (an
+    explicit id repartition that the dedup aggregation and every
+    downstream id-keyed window/agg reuse): consumers that branch the
+    shingle set several ways, like the prefix-filter family, would
+    otherwise each re-pay that clustering. ``distinct=False``
+    consumers aggregate immediately (minhash min, winnowing's
+    min-by-window, which re-keys anyway), so they get the fully
+    map-side form with no pre-shuffle.
     """
-    extras = [F.col(c) for c in (extra_cols or [])]
-    pos_cols = [F.col("pos")] if keep_pos else []
-    toks = F.split(F.col(text_col), " ")
-    if n == 1:
-        tok = docs.select(
-            F.col(id_col), *extras, F.posexplode(toks).alias("pos", "w")
-        )
-        out = tok.select(
-            F.col(id_col), *extras, *pos_cols, F.col("w").alias("shingle")
-        )
-        return out.distinct() if distinct else out
-    if builder == "window":
-        w = W.partitionBy(id_col).orderBy("pos")
-        tok = docs.select(
-            F.col(id_col), *extras, F.posexplode(toks).alias("pos", "w")
-        )
-        leads = [F.lead("w", k).over(w).alias(f"w{k}") for k in range(1, n)]
-        with_leads = tok.select(
-            F.col(id_col), *extras, F.col("pos"), F.col("w"), *leads
-        )
-        shingle = F.concat_ws(" ", "w", *[f"w{k}" for k in range(1, n)])
-        out = with_leads.filter(F.col(f"w{n-1}").isNotNull()).select(
-            F.col(id_col), *extras, *pos_cols, shingle.alias("shingle")
-        )
-        return out.distinct() if distinct else out
-    m = F.greatest(F.size(toks) - (n - 1), F.lit(0))
-    zipped = F.arrays_zip(*[F.slice(toks, k + 1, m) for k in range(n)])
-    exploded = docs.select(
-        F.col(id_col), *extras, F.posexplode(zipped).alias("pos", "__sh")
-    )
-    # arrays_zip names unnamed inputs positionally: fields "0".."n-1"
-    shingle = F.concat_ws(" ", *[F.col("__sh")[str(k)] for k in range(n)])
-    out = exploded.select(
-        F.col(id_col), *extras, *pos_cols, shingle.alias("shingle")
+    keep = [id_col, *(extra_cols or [])]
+    pos_cols = ["pos"] if keep_pos else []
+    grams = ngram_rows(docs, F.split(F.col(text_col), " "), n, *keep)
+    out = grams.select(
+        *keep, *pos_cols, F.array_join("g", " ").alias("shingle")
     )
     return out.repartition(id_col).distinct() if distinct else out
 
@@ -665,12 +638,9 @@ def sorted_neighborhood_pairs(
         )
         cands = pair if cands is None else cands.unionAll(pair)
     cands = cands.filter(F.col("id_a") != F.col("id_b")).distinct()
-    # builder="window": the shingle subtree is consumed on BOTH verify
-    # joins; the window form's exchange is the plan's reuse point and
-    # measured faster than the map-side build here (see shingle_rows)
-    sh = shingle_rows(
-        docs, 3, id_col=id_col, text_col=text_col, builder="window"
-    )
+    # the shingle subtree is consumed on BOTH verify joins; its id
+    # repartition (distinct=True) is the plan's reuse point
+    sh = shingle_rows(docs, 3, id_col=id_col, text_col=text_col)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     inter = (
         cands.join(sh.select(F.col(id_col).alias("id_a"), "shingle"), "id_a")

@@ -23,13 +23,7 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from flink_template_spark.functions.vector import cosine_arrow, valid_vec
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition to session parallelism before per-row vector math —
-    single-file parquet inputs otherwise run the expensive expressions
-    on one core (one input split)."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+from flink_template_spark.operators.dedup import _spread
 
 
 def brute_force_topk(

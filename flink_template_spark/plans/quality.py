@@ -35,46 +35,47 @@ from flink_template_spark.tables import load_table
 def _tagged_grams(docs: DataFrame) -> DataFrame:
     """(doc_id, n, g) rows for n ∈ {1,2,3}, duplicates kept.
 
-    Codegen formulation: posexplode tokens once, take two window
-    ``lead()``s, and emit up to three tagged grams per token position
-    from a literal 3-element array — no higher-order-function lambdas
-    (Spark evaluates those interpreted; the transform-built version of
-    this measured several times slower at sf0.1). Tail positions where
-    a lead is null produce null grams and are filtered."""
-    from pyspark.sql import Window as W
+    One ``ngram_rows`` pass over the tokens with tail windows: every
+    position's up-to-3-token slice emits its 1-gram and, where the
+    slice is long enough, its 2- and 3-gram from a literal 3-element
+    array. No window and no higher-order-function lambdas (Spark
+    evaluates those interpreted; the transform-built version of this
+    measured several times slower at sf0.1). The grams a short tail
+    slice lacks are NULL and filtered."""
+    from flink_template_spark.operators.dedup import _spread, ngram_rows
 
-    tok = docs.select(
-        "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "w")
-    )
-    w = W.partitionBy("doc_id").orderBy("pos")
-    # windows must be materialized in their own projection — they cannot
-    # appear inside the generator below
-    led = tok.select(
-        "doc_id",
-        "w",
-        F.lead("w", 1).over(w).alias("w1"),
-        F.lead("w", 2).over(w).alias("w2"),
+    # _spread: the gram build and its partial agg would otherwise run
+    # in the one task of a single-file input (the old window's exchange
+    # spread them)
+    win = ngram_rows(
+        _spread(docs), F.split(F.col("text"), " "), 3, "doc_id", tails=True
     )
     grams = F.array(
-        F.struct(F.lit(1).alias("n"), F.col("w").alias("g")),
-        F.struct(
-            F.lit(2).alias("n"),
-            F.when(
-                F.col("w1").isNotNull(), F.concat_ws(" ", "w", "w1")
-            ).alias("g"),
-        ),
-        F.struct(
-            F.lit(3).alias("n"),
-            F.when(
-                F.col("w1").isNotNull() & F.col("w2").isNotNull(),
-                F.concat_ws(" ", "w", "w1", "w2"),
-            ).alias("g"),
-        ),
+        *[
+            F.struct(
+                F.lit(k).alias("n"),
+                F.when(
+                    F.size("g") >= k, F.array_join(F.slice("g", 1, k), " ")
+                ).alias("g"),
+            )
+            for k in (1, 2, 3)
+        ]
     )
     return (
-        led.select("doc_id", F.explode(grams).alias("t"))
+        win.select("doc_id", F.explode(grams).alias("t"))
         .filter(F.col("t.g").isNotNull())
         .select("doc_id", F.col("t.n").alias("n"), F.col("t.g").alias("g"))
+    )
+
+
+def _bigrams(docs: DataFrame, *cols: str) -> DataFrame:
+    """(cols..., w1, w2) rows: every adjacent token pair of the
+    single-space split, from ``ngram_rows``; docs with fewer than two
+    tokens have none."""
+    from flink_template_spark.operators.dedup import ngram_rows
+
+    return ngram_rows(docs, F.split(F.col("text"), " "), 2, *cols).select(
+        *cols, F.col("g")[0].alias("w1"), F.col("g")[1].alias("w2")
     )
 
 
@@ -662,25 +663,20 @@ def q_repeated_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold (no run-id shuffle), and spans covering ≥20 tokens are
     reported as (doc_id, 1-based span_start, span_tokens).
 
-    Scale shape: non-distinct 10-gram rows from the codegen lead
-    pipeline; occurrence counts get map-side partial agg; the flag join
-    is shingle-keyed (AQE handles hot shingles); the run fold is one
-    doc-keyed window. No all-pairs anything.
+    Scale shape: non-distinct 10-gram rows built map-side
+    (shingle_rows); the occurrence count is one shingle-keyed window
+    (AQE handles hot shingles); the run fold is one doc-keyed window.
+    No all-pairs anything.
     """
     from pyspark.sql import Window as W
 
+    from flink_template_spark.operators.dedup import shingle_rows
+
     docs = load_table(spark, sf_dir, "documents")
-    n = 10
-    tok = docs.select(
-        "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos0", "w")
-    )
-    wspec = W.partitionBy("doc_id").orderBy("pos0")
-    leads = [F.lead("w", k).over(wspec).alias(f"w{k}") for k in range(1, n)]
-    led = tok.select("doc_id", "pos0", "w", *leads)
-    sh = led.filter(F.col(f"w{n-1}").isNotNull()).select(
+    sh = shingle_rows(docs, 10, distinct=False, keep_pos=True).select(
         "doc_id",
-        (F.col("pos0") + 1).alias("pos"),  # 1-based, matching the oracle
-        F.concat_ws(" ", "w", *[f"w{k}" for k in range(1, n)]).alias("shingle"),
+        (F.col("pos") + 1).alias("pos"),  # 1-based, matching the oracle
+        "shingle",
     )
     # occurrence count via a shingle-partitioned window COUNT instead of
     # groupBy + self-join back: one exchange of the shingle rows, no join
@@ -784,18 +780,11 @@ def q_scrub_repeated_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
+    from flink_template_spark.operators.dedup import shingle_rows
+
     docs = load_table(spark, sf_dir, "documents")
-    n = 10
-    tok0 = docs.select(
-        "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos0", "w")
-    )
-    wspec = W.partitionBy("doc_id").orderBy("pos0")
-    leads = [F.lead("w", k).over(wspec).alias(f"w{k}") for k in range(1, n)]
-    led = tok0.select("doc_id", "pos0", "w", *leads)
-    sh = led.filter(F.col(f"w{n-1}").isNotNull()).select(
-        "doc_id",
-        (F.col("pos0") + 1).alias("pos"),
-        F.concat_ws(" ", "w", *[f"w{k}" for k in range(1, n)]).alias("shingle"),
+    sh = shingle_rows(docs, 10, distinct=False, keep_pos=True).select(
+        "doc_id", (F.col("pos") + 1).alias("pos"), "shingle"
     )
     # window COUNT over the shingle partition instead of groupBy + join —
     # see q_repeated_passages (same rewrite, same measured win)
@@ -821,7 +810,9 @@ def q_scrub_repeated_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     covered = spans.select(
         "doc_id", F.explode(F.sequence(F.col("s"), F.col("s") + F.col("len") - 1)).alias("pos")
     ).distinct()
-    tok = tok0.select("doc_id", (F.col("pos0") + 1).alias("pos"), F.col("w").alias("word"))
+    tok = docs.select(
+        "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos0", "word")
+    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "word")
     kept = tok.join(covered, ["doc_id", "pos"], "left_anti")
     ordered = F.transform(
         F.array_sort(F.collect_list(F.struct("pos", "word"))),
@@ -1071,21 +1062,8 @@ def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-keyed sum so the mean is partition-order-exact. Docs with
     fewer than two tokens have no bigrams and are absent, as in the
     oracle."""
-    from pyspark.sql import Window as W
-
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "w")
-    )
-    w_lead = W.partitionBy("doc_id").orderBy("pos")
-    big = (
-        tok.select(
-            "doc_id",
-            F.col("w").alias("w1"),
-            F.lead("w", 1).over(w_lead).alias("w2"),
-        )
-        .filter(F.col("w2").isNotNull())
-    )
+    big = _bigrams(docs, "doc_id")
     counts = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     firsts = counts.groupBy("w1").agg(F.sum("c12").alias("c1"))
     q = F.round(
@@ -1470,23 +1448,11 @@ def q_stupid_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sibling gates: both branches quantize their log10 to ×1e7
     bigints per position (the backoff penalty is a Python-computed
     literal, identical in both engines) before the doc-keyed sum."""
-    from pyspark.sql import Window as W
-
     from flink_template_spark.plans.datapipe import split_of
 
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "w")
-    )
-    w_lead = W.partitionBy("doc_id").orderBy("pos")
-    big = (
-        tok.select(
-            "doc_id",
-            F.col("w").alias("w1"),
-            F.lead("w", 1).over(w_lead).alias("w2"),
-        )
-        .filter(F.col("w2").isNotNull())
-    )
+    tok = docs.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("w"))
+    big = _bigrams(docs, "doc_id")
     is_train = split_of() == "train"
     counts = (
         big.filter(is_train).groupBy("w1", "w2").agg(
@@ -1999,29 +1965,17 @@ def q_bigram_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     product form would overflow at corpus scale (c1·c2·N_bi can pass
     2^63), which is why the division form is the scale-safe one.
 
-    Scale shape: one tokenization pass feeds the unigram table; one
-    lag-window pass feeds the bigram table; both count tables are
+    Scale shape: one tokenization pass feeds the unigram table; the
+    map-side bigram rows (_bigrams) feed the bigram table; both count
+    tables are
     Zipf-small; the two unigram joins hash on the token; the global
     top-{_LIFT_TOP} is TakeOrderedAndProject (no global sort). The
     1-row totals ride along as broadcast crossJoins."""
-    from pyspark.sql import Window as W
-
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "w")
-    )
+    tok = docs.select(F.explode(F.split(F.col("text"), " ")).alias("w"))
     uni = tok.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     n_uni = uni.agg(F.sum("c").cast("bigint").alias("nu"))
-    w_lead = W.partitionBy("doc_id").orderBy("pos")
-    big = (
-        tok.select(
-            "doc_id",
-            F.col("w").alias("w1"),
-            F.lead("w", 1).over(w_lead).alias("w2"),
-        )
-        .filter(F.col("w2").isNotNull())
-        .select("w1", "w2")
-    )
+    big = _bigrams(docs)
     bc = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     n_bi = bc.agg(F.sum("c12").cast("bigint").alias("nb"))
     u1 = uni.select(F.col("w").alias("w1"), F.col("c").alias("c1"))
@@ -2339,29 +2293,18 @@ def q_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     addition in identical parenthesization in both engines — with no
     transcendentals (probability space, not log space), 6-dp rounded.
 
-    Scale shape: bigrams via per-doc LEAD windows (doc-partitioned);
-    ALL four statistics (c12, c1, N1+ forward/backward, type count)
+    Scale shape: bigrams built map-side (_bigrams), no exchange before
+    the type count; ALL four statistics (c12, c1, N1+ forward/backward, type count)
     are hash aggregates over the Zipf-small bigram-type table with
     map-side partials; the two stat joins are type-table-sized; the
     top-{_KN_TOP} is TakeOrderedAndProject."""
-    from pyspark.sql import Window as W
-
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "w")
-    )
-    w_lead = W.partitionBy("doc_id").orderBy("pos")
-    big = (
-        tok.select(
-            F.col("w").alias("w1"), F.lead("w", 1).over(w_lead).alias("w2")
-        )
-        .filter(F.col("w2").isNotNull())
-    )
     # FOUR consumers (output rows, fwd, bwd, type count) reference the
     # bigram-type table; it is Zipf-small, so pin one materialization
-    # instead of re-running the corpus explode+window per consumer
+    # instead of re-running the corpus bigram pass per consumer
     bc = (
-        big.groupBy("w1", "w2")
+        _bigrams(docs)
+        .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c12"))
         .localCheckpoint(eager=False)
     )
@@ -2391,6 +2334,23 @@ def q_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("c12"), "w1", "w2")
         .limit(_KN_TOP)
     )
+
+
+def _char_trigrams(src: DataFrame) -> DataFrame:
+    """(doc_id, lang, g) rows: every character trigram occurrence of
+    ``text``. One linear split into a code-point array, then
+    ``ngram_rows``' 3-slices joined back: every operator is a codegen
+    expression and each char is cut exactly once. split('') and the
+    oracle's substring both index by CODE POINT, so non-BMP text
+    agrees. Re-cutting the text per trigram (substring per exploded
+    position) measured 28% slower, and the interpreted
+    transform(sequence, i -> substring) lambda before it was quadratic
+    per doc."""
+    from flink_template_spark.operators.dedup import ngram_rows
+
+    return ngram_rows(
+        src, F.split(F.col("text"), ""), 3, "doc_id", "lang"
+    ).select("doc_id", "lang", F.array_join("g", "").alias("g"))
 
 
 _LID_K = 50  # profile size: top trigrams per language
@@ -2458,40 +2418,10 @@ def q_lang_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     docs = load_table(spark, sf_dir, "documents")
-
-    def _tri(src: DataFrame) -> DataFrame:
-        # One linear split into a char array, then the three off-by-one
-        # slices zipped map-side (the shingle_rows arrays_zip shape at
-        # character grain) — every operator is a codegen expression.
-        # Replaces (optimization r13, guide §2.4/§1.2) the interpreted
-        # `transform(sequence(...), i -> substring(text, i, 3))` lambda,
-        # whose substring did an O(i) UTF-8 seek per position (quadratic
-        # per doc, and an interpreted HOF eval per trigram). An earlier
-        # rewrite attempt — explode(sequence) + codegen substring — was
-        # 28% SLOWER because it re-cut the text per exploded row; the
-        # split form cuts each char exactly once. Row-identical to the
-        # old lambda incl. code-point semantics (split('') and substring
-        # both index by code point; non-BMP pinned by
-        # tests/test_r13_opt.py::test_lang_id_trigram_split_matches_substring).
-        chs = src.select(
-            "doc_id", "lang", F.split(F.col("text"), "").alias("__ch")
-        )
-        n3 = F.greatest(F.size("__ch") - F.lit(2), F.lit(0))
-        z = F.arrays_zip(
-            F.slice("__ch", 1, n3).alias("c0"),
-            F.slice("__ch", 2, n3).alias("c1"),
-            F.slice("__ch", 3, n3).alias("c2"),
-        )
-        return chs.select(
-            "doc_id", "lang", F.explode(z).alias("__t")
-        ).select(
-            "doc_id",
-            "lang",
-            F.concat("__t.c0", "__t.c1", "__t.c2").alias("g"),
-        )
-
-    tri = _tri(docs)
-    tri_sample = _tri(docs.filter((F.col("doc_id") % _LID_SAMPLE_MOD) == 0))
+    tri = _char_trigrams(docs)
+    tri_sample = _char_trigrams(
+        docs.filter((F.col("doc_id") % _LID_SAMPLE_MOD) == 0)
+    )
     w_lang = W.partitionBy("lang").orderBy(F.desc("c"), "g")
     prof = (
         tri_sample.groupBy("lang", "g")
@@ -3277,7 +3207,7 @@ def q_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-_SKIP_WINDOW = 2  # forward skip-gram window (drives LEAD offsets below)
+_SKIP_WINDOW = 2  # forward skip-gram window (drives the offsets below)
 _SKIP_TOP = 20
 
 # Both the Spark plan and the oracle derive their neighbor branches
@@ -3322,31 +3252,25 @@ def q_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     every token, its next-1 and next-2 neighbors, counted corpus-wide,
     top-20 with a deterministic (count DESC, w1, w2) cut.
 
-    Scale shape: neighbors come from two LEAD windows PARTITIONED BY
-    doc (bounded by document length, never corpus-sized — and
-    deliberately NOT a positional self-join, whose doc-keyed join
-    would go quadratic per document); the pair count is one hash agg
-    with map-side partials over the Zipf-small pair-type table; the
-    top-{_SKIP_TOP} is TakeOrderedAndProject. Integer counts
-    end-to-end."""
-    from pyspark.sql import Window as W
+    Scale shape: neighbors come map-side from each position's tail
+    window of up to 1 + {_SKIP_WINDOW} tokens (ngram_rows; bounded by
+    document length, no exchange — and deliberately NOT a positional
+    self-join, whose doc-keyed join would go quadratic per document);
+    the pair count is one hash agg with map-side partials over the
+    Zipf-small pair-type table; the top-{_SKIP_TOP} is
+    TakeOrderedAndProject. Integer counts end-to-end."""
+    from flink_template_spark.operators.dedup import ngram_rows
 
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id",
-        F.posexplode(F.split(F.col("text"), " ")).alias("pos", "t"),
+    win = ngram_rows(
+        docs, F.split(F.col("text"), " "), _SKIP_WINDOW + 1, tails=True
     )
-    w = W.partitionBy("doc_id").orderBy("pos")
-    pairs = tok.select(
-        F.col("t").alias("w1"),
-        *[F.lead("t", k).over(w).alias(f"n{k}") for k in _SKIP_OFFS],
-    )
-    # ONE pass over the windowed subtree: explode all neighbor slots
-    # (a union of filtered branches would re-run the tokenize +
-    # LEAD window once per branch)
-    tall = pairs.select(
-        "w1",
-        F.explode(F.array(*[f"n{k}" for k in _SKIP_OFFS])).alias("w2"),
+    # ONE pass over the windows: explode all neighbor slots (a union of
+    # filtered branches would re-run the tokenize once per branch);
+    # get() is NULL past a tail window's end
+    tall = win.select(
+        F.get("g", 0).alias("w1"),
+        F.explode(F.array(*[F.get("g", k) for k in _SKIP_OFFS])).alias("w2"),
     ).filter(F.col("w2").isNotNull())
     return (
         tall.groupBy("w1", "w2")

@@ -270,7 +270,7 @@ def q_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint the shingle table: it feeds the train probe once
     # and the eval side THREE times (bloom sizing count, bloom build,
     # exact verify) — without materializing it each reference re-runs
-    # the full tokenize + lead-window pass over the corpus. Checkpoint
+    # the full tokenize + shingle pass over the corpus. Checkpoint
     # rather than persist so the blocks are GC-scoped (freed with the
     # DataFrame by the ContextCleaner) instead of pinned for the rest
     # of a long driver session (ADVICE r3). Known trade: localCheckpoint
@@ -280,13 +280,7 @@ def q_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # needs mid-query fault recovery should swap this for persist() and
     # unpersist after the final action (the same trade every
     # localCheckpoint in operators.components/kmeans makes).
-    # builder="window": this n=5 eagerly-checkpointed build measured
-    # faster on the lead-window form than the map-side arrays_zip form
-    # (1.28 vs 1.53 s min-of-5 at sf0.1 — five slice copies per row
-    # outweigh the saved sort when the table is materialized once)
-    sh = shingle_rows(
-        docs, _DECON_N, extra_cols=["is_train"], builder="window"
-    ).localCheckpoint()
+    sh = shingle_rows(docs, _DECON_N, extra_cols=["is_train"]).localCheckpoint()
     train_sh = sh.filter(F.col("is_train")).select("doc_id", "shingle")
     eval_sh = sh.filter(~F.col("is_train")).select("shingle").distinct()
 

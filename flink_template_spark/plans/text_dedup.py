@@ -1248,9 +1248,9 @@ def q_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     rightmost-minimum k-gram hash in every window of WINNOW_W
     consecutive hashes, deduplicated (consecutive windows usually
     re-select the same minimum — that collapse is winnowing's density
-    guarantee, ~2/(w+1) of positions). One doc-keyed window shuffle
-    covers the k-gram build, the sliding min, and the dedup; at corpus
-    scale fingerprints feed an equi-join index exactly like MinHash
+    guarantee, ~2/(w+1) of positions). The k-grams are built map-side
+    (shingle_rows); one doc-keyed window shuffle covers the sliding
+    min; at corpus scale fingerprints feed an equi-join index exactly like MinHash
     bands (a shared >= w+k-1-token passage ALWAYS shares a
     fingerprint — the exact-guarantee dual of MinHash's probabilistic
     one)."""

@@ -74,6 +74,34 @@ def test_minhash_no_cartesian(spark, sf):
     assert len(_re.findall(r"(?m)^\(\d+\) Generate$", p)) == 4
 
 
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_repetition_metrics",
+        "q_ngram_novelty",
+        "q_repeated_passages",
+        "q_scrub_repeated_passages",
+        "q_bigram_logprob",
+        "q_stupid_backoff",
+        "q_bigram_lift",
+        "q_skipgram_pairs",
+        "q_lang_id_ngram",
+        "q_sorted_neighborhood_pairs",
+        "q_minhash_lsh_pairs",
+    ],
+)
+def test_ngrams_come_from_the_one_builder(spark, sf, name):
+    """Every n-gram is a start-index slice (operators.dedup.ngram_rows):
+    an explode of sequence(0, ...) and no token-position lead window,
+    arrays_zip of slice copies or zip_with lambda. q_kneser_ney_bigram
+    and q_decontaminate_bloom checkpoint their n-gram tables, so their
+    plans do not show the subtree."""
+    p = plan_of(plans.QUERIES[name](spark, sf))
+    assert "explode(sequence(0, " in p
+    for form in ("lead(", "arrays_zip", "zip_with"):
+        assert form not in p, f"{name}: {form} n-gram in the plan"
+
+
 def test_lsh_near_dup_no_cartesian(spark, sf):
     p = plan_of(plans.QUERIES["q_embedding_near_dup_lsh"](spark, sf))
     assert "CartesianProduct" not in p  # bucket join, unlike the exact baseline

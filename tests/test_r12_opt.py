@@ -591,48 +591,6 @@ def test_global_rank_prefix_matches_full_rank(spark, sf_dir):
     assert [tuple(r) for r in got] == [tuple(r) for r in ref]
 
 
-def test_bpe_pair_counts_zipwith_matches_window_lead(spark):
-    """_pair_counts' map-side zip_with-over-slices form must produce the
-    identical weighted pair-count table as the posexplode + word-keyed
-    lead-window formulation it replaced — including single-symbol words
-    (no pairs) and repeated symbols (run pairs counted per position)."""
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    from flink_template_spark.operators.bpe import _pair_counts, _symbolize
-
-    words = spark.createDataFrame(
-        [
-            ("low", 5),
-            ("lower", 2),
-            ("newest", 6),
-            ("widest", 3),
-            ("aaaa", 4),   # run pairs: (a,a) x3 positions
-            ("x", 7),      # single char + </w>: exactly one pair
-        ],
-        "word string, cnt long",
-    )
-    vocab = _symbolize(words)
-    got = {
-        (r.a, r.b): r.pair_cnt for r in _pair_counts(vocab).collect()
-    }
-    ex = vocab.select("word", "cnt", F.posexplode("syms").alias("pos", "sym"))
-    w = W.partitionBy("word").orderBy("pos")
-    ref_df = (
-        ex.select(
-            "cnt",
-            F.col("sym").alias("a"),
-            F.lead("sym", 1).over(w).alias("b"),
-        )
-        .filter(F.col("b").isNotNull())
-        .groupBy("a", "b")
-        .agg(F.sum("cnt").alias("pair_cnt"))
-    )
-    ref = {(r.a, r.b): r.pair_cnt for r in ref_df.collect()}
-    assert got == ref
-    assert got[("a", "a")] == 4 * 3  # run-pair positions, weighted
-
-
 def test_ann_index_fused_build_matches_joined_build(spark, sf_dir):
     """The fused index build (codes tagged before the IVF argmax, no
     vec_id join) must produce the identical (vec_id, codes, cluster)

@@ -53,55 +53,6 @@ def test_plane_dot_fixed_width_contract(spark):
         )
 
 
-def test_shingle_rows_zip_matches_window_lead(spark, sf_dir):
-    """The map-side arrays_zip shingle build must emit row-identical
-    output to the window-lead formulation it replaced (kept in-tree as
-    builder="window" for the two call sites that measured faster on
-    it) — on the real fixture and on adversarial docs (short docs,
-    runs of spaces / empty tokens, single token, empty string, NULL
-    text)."""
-    from flink_template_spark.operators.dedup import shingle_rows
-    from flink_template_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    adversarial = spark.createDataFrame(
-        [
-            (9001, "one two three four five"),
-            (9002, "a  b c"),       # empty token from the double space
-            (9003, "solo"),
-            (9004, ""),
-            (9005, None),
-            (9006, "x y"),          # n-1 tokens for n=3
-            (9007, "r r r r"),      # repeated tokens -> duplicate shingles
-        ],
-        "doc_id long, text string",
-    )
-    for src in (docs, adversarial):
-        for n in (1, 3, 5):
-            for distinct in (True, False):
-                for keep_pos in (False, True):
-                    if n == 1:
-                        # both builders share the unchanged n=1 branch
-                        continue
-                    got = shingle_rows(
-                        src, n, distinct=distinct, keep_pos=keep_pos
-                    )
-                    ref = shingle_rows(
-                        src,
-                        n,
-                        distinct=distinct,
-                        keep_pos=keep_pos,
-                        builder="window",
-                    )
-                    cols = got.columns
-                    g = sorted(map(tuple, got.select(cols).collect()))
-                    r = sorted(map(tuple, ref.select(cols).collect()))
-                    assert g == r, (
-                        f"mismatch n={n} distinct={distinct} "
-                        f"keep_pos={keep_pos} ({len(g)} vs {len(r)} rows)"
-                    )
-
-
 def test_minhash_instance_min_matches_distinct_min(spark, sf_dir):
     """minhash_signatures' distinct=False shingle feed must produce the
     identical signature table as a min over the DISTINCT shingle set
@@ -131,69 +82,6 @@ def test_minhash_instance_min_matches_distinct_min(spark, sf_dir):
     g = sorted(map(tuple, got.collect()))
     r = sorted(map(tuple, ref.collect()))
     assert g == r and len(g) > 0
-
-
-def test_lang_id_trigram_split_matches_substring(spark, sf_dir):
-    """q_lang_id_ngram's split('')+arrays_zip trigram build must emit
-    the identical (doc, trigram) multiset as the interpreted
-    transform(sequence, i -> substring(text, i, 3)) lambda it replaced
-    — on the real fixture and on adversarial docs (non-BMP code points,
-    combining marks, empty, single/double char, NULL). Both substring()
-    and split('') index by CODE POINT; a surrogate-pair split would
-    silently corrupt trigrams."""
-    from flink_template_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "text"
-    )
-    adversarial = spark.createDataFrame(
-        [
-            (1, "xx", "hello world"),
-            (2, "xx", "a\U0001f600b\U0001f680cd"),   # non-BMP surrogate pairs
-            (3, "xx", "éabc"),                  # combining mark
-            (4, "xx", ""),
-            (5, "xx", "ab"),
-            (6, "xx", "abc"),
-            (7, "xx", None),
-            (8, "xx", "ñüßπ中文字"),
-        ],
-        "doc_id long, lang string, text string",
-    )
-
-    def tri_old(src):
-        return src.select(
-            "doc_id",
-            "lang",
-            F.explode(
-                F.expr(
-                    "CASE WHEN length(text) >= 3 THEN "
-                    "transform(sequence(1, length(text) - 2),"
-                    " i -> substring(text, i, 3)) "
-                    "ELSE array() END"
-                )
-            ).alias("g"),
-        )
-
-    def tri_new(src):
-        chs = src.select(
-            "doc_id", "lang", F.split(F.col("text"), "").alias("__ch")
-        )
-        n3 = F.greatest(F.size("__ch") - F.lit(2), F.lit(0))
-        z = F.arrays_zip(
-            F.slice("__ch", 1, n3).alias("c0"),
-            F.slice("__ch", 2, n3).alias("c1"),
-            F.slice("__ch", 3, n3).alias("c2"),
-        )
-        return chs.select(
-            "doc_id", "lang", F.explode(z).alias("__t")
-        ).select(
-            "doc_id", "lang", F.concat("__t.c0", "__t.c1", "__t.c2").alias("g")
-        )
-
-    for src in (docs, adversarial):
-        a = sorted(map(tuple, tri_old(src).collect()))
-        b = sorted(map(tuple, tri_new(src).collect()))
-        assert a == b and (src is adversarial or len(a) > 0)
 
 
 def test_pq_codes_arrow_bit_identical(spark, sf_dir):
