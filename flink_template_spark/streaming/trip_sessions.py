@@ -2,29 +2,32 @@
 the reference's windowing core (SURVEY.md §2.3 W3+W4+W5):
 
 reference                                   → here
-GlobalWindows per trip id                   → keyed GroupState
-ProcessingTimeTrigger(min=10 ms, max=4 s)   → ProcessingTimeTimeout with
-  (ProcessingTimeTrigger.kt:9-76)             the same re-arm rule
-FIRE_AND_PURGE + clear()                    → emit on timeout + state.remove()
-AggregateFunction add/getResult             → buffered state + pandas finalize
+keyBy(trip id) + GlobalWindows              → GroupState per hash bucket
+  (TripAggregatorApplication.kt:166)          pmod(trip_id, BUCKETS) holding
+                                              its open trips
+ProcessingTimeTrigger(min=10 ms, max=4 s)   → per-trip deadline, same re-arm
+  (ProcessingTimeTrigger.kt:9-76)             rule; the bucket's timeout is
+                                              its earliest deadline
+FIRE_AND_PURGE + clear()                    → emit the trip, drop it from its
+                                              bucket; remove an empty bucket
+AggregateFunction add/getResult             → buffered state + Python finalize
   (TripAggregatorApplication.kt:58-164)
 
-One session function serves both entry points; they differ only in
-its deadline rule (the processing-time re-arm rule or the event-time
-gap) and the matching GroupStateTimeout. On timeout: emit the aggregate
-and purge (FIRE_AND_PURGE, :15-24). Late events after a purge re-open a
-fresh session (W6).
-
-State stays bounded per key (the reference's retention bound, SURVEY.md
-§4.1): buffers hold only PID-bearing readings, deduped by timestamp ON
-INSERT (the reference's TreeSet behavior) — state is bounded by the
-session's distinct timestamps, not raw event count — and are dropped on
-every emit.
+One session function serves both entry points: the processing-time
+re-arm rule tested against the batch time, or the event-time gap tested
+against the watermark. A call folds its bucket's rows into their trips
+and closes each trip that got none and whose deadline is strictly below
+that threshold (Spark's own per-key test, ``timeoutTimestamp <
+threshold``), so a trip closes in the same micro-batch as under a
+per-trip key; a late event after a purge re-opens a fresh session (W6).
+BUCKETS caps the Python calls per micro-batch, each of which pays
+pyspark's per-group conversion. A checkpoint written under the per-trip
+key cannot be resumed: the state key and schema differ.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 from functools import partial
 
 import pandas as pd
@@ -39,6 +42,8 @@ from flink_template_spark.operators.trip_agg import STOPPED_SPEED_KMH
 
 MIN_RETENTION_MS = 10
 MAX_RETENTION_MS = 4000
+# GroupState keys; fixed, since a checkpoint's state is keyed by them
+BUCKETS = 16
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -52,13 +57,13 @@ OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
-# Per-stream parallel arrays, already DEDUPED by timestamp (the
-# reference's TreeSet semantics, TripAggregation.kt:17-19 / quirk Q4:
-# the second insert at an equal timestamp is ignored ON INSERT). State
-# is therefore bounded by the session's DISTINCT timestamps, not its
-# raw event count — the retention bound of SURVEY.md §4.1 / hard-part 4.
-STATE_SCHEMA = T.StructType(
+# One open trip: PID-bearing readings only, DEDUPED by timestamp ON
+# INSERT (the reference's TreeSet, TripAggregation.kt:17-19 / quirk Q4),
+# so a trip's state is bounded by its DISTINCT timestamps (SURVEY.md
+# §4.1 / hard-part 4) and is dropped on emit.
+TRIP_STATE = T.StructType(
     [
+        T.StructField("trip_id", T.LongType()),
         T.StructField("gps_ts", T.ArrayType(T.LongType())),
         T.StructField("gps_lat", T.ArrayType(T.DoubleType())),
         T.StructField("gps_lon", T.ArrayType(T.DoubleType())),
@@ -69,13 +74,13 @@ STATE_SCHEMA = T.StructType(
         T.StructField("deadline_ms", T.LongType()),
     ]
 )
+STATE_SCHEMA = T.StructType([T.StructField("trips", T.ArrayType(TRIP_STATE))])
 
 
-def _finalize(trip_id: int, st: tuple) -> pd.DataFrame:
-    """A6-A9 over one session's state tuple (STATE_SCHEMA order; the
-    buffers are ts-deduped on insert). Intended semantics — see
-    operators.trip_agg for the quirk ledger, including why stopped time
-    is the sum of deltas between consecutive stopped readings."""
+def _finalize(trip_id: int, st: tuple) -> tuple:
+    """A6-A9 over one session's state (TRIP_STATE after trip_id) → an
+    OUTPUT_SCHEMA row. See operators.trip_agg for the quirk ledger,
+    including why stopped time sums deltas between stopped readings."""
     gps_ts, gps_lat, gps_lon, sp_ts, sp_kmh, vin, n_events, _ = st
     gps = sorted(zip(gps_ts, gps_lat, gps_lon))
     dist = sum(
@@ -91,113 +96,117 @@ def _finalize(trip_id: int, st: tuple) -> pd.DataFrame:
     all_ts = [*gps_ts, *sp_ts]
     total_s = (max(all_ts) // 1_000_000 - min(all_ts) // 1_000_000) if all_ts else 0
     stopped_s = stopped_us // 1_000_000
-    row = (trip_id, vin, n_events, float(dist), total_s, total_s - stopped_s, stopped_s)
-    return pd.DataFrame([row], columns=OUTPUT_SCHEMA.fieldNames())
+    return (trip_id, vin, n_events, float(dist), total_s, total_s - stopped_s, stopped_s)
 
 
-def _fold(prev: tuple | None, pdfs: Iterator[pd.DataFrame]) -> tuple[tuple, int]:
-    """Fold a batch of rows (``_sessionize``'s six columns) into the
-    (possibly existing) session state. The vin is the first non-NULL
-    ``start_vin``, i.e. the first TripStart's. Returns the updated state
-    tuple plus the max event-time seen, in epoch ms (0 if the batch had
-    no rows)."""
+def _fold(prev: tuple | None, rows: list[tuple]) -> tuple[tuple, int]:
+    """Fold one trip's rows of a call, ``(ts in us, start_vin, speed_kmh,
+    lat, lon)`` with NaN for NULL, into its (possibly new) session state.
+    The vin is the first non-NULL ``start_vin``, i.e. the first
+    TripStart's. Returns the state plus the max event time in epoch ms."""
     *buffers, vin, n_events, deadline_ms = prev or ((), (), (), (), (), None, 0, 0)
     gps_ts, gps_lat, gps_lon, sp_ts, sp_kmh = map(list, buffers)
 
-    max_event_ms = 0
     # membership sets make the Q4 insert-dedup O(1) per event
     gps_known, sp_known = set(gps_ts), set(sp_ts)
-    for pdf in pdfs:
-        for row in pdf.itertuples(index=False):
-            n_events += 1
-            if vin is None:
-                vin = row.start_vin
-            ts = int(row.ts.value // 1_000)  # pandas ns → us
-            max_event_ms = max(max_event_ms, ts // 1_000)
-            # pd.isna covers both None and NaN
-            if not pd.isna(row.lat) and ts not in gps_known:
-                gps_known.add(ts)
-                gps_ts.append(ts)
-                gps_lat.append(float(row.lat))
-                gps_lon.append(float(row.lon))
-            if not pd.isna(row.speed_kmh) and ts not in sp_known:
-                sp_known.add(ts)
-                sp_ts.append(ts)
-                sp_kmh.append(int(row.speed_kmh))
-    st = (gps_ts, gps_lat, gps_lon, sp_ts, sp_kmh, vin, n_events, deadline_ms)
-    return st, max_event_ms
+    for ts, start_vin, speed_kmh, lat, lon in rows:
+        if vin is None:
+            vin = start_vin
+        # x == x is False only for NaN, i.e. a NULL reading
+        if lat == lat and ts not in gps_known:
+            gps_known.add(ts)
+            gps_ts.append(ts)
+            gps_lat.append(lat)
+            gps_lon.append(lon)
+        if speed_kmh == speed_kmh and ts not in sp_known:
+            sp_known.add(ts)
+            sp_ts.append(ts)
+            sp_kmh.append(int(speed_kmh))
+    st = (gps_ts, gps_lat, gps_lon, sp_ts, sp_kmh, vin, n_events + len(rows), deadline_ms)
+    return st, max(ts for ts, *_ in rows) // 1_000
 
 
-def _processing_time_deadline(state: GroupState, deadline_ms: int, _: int) -> int:
+def _processing_time_deadline(deadline_ms: int, _: int, now_ms: int) -> int:
     # ProcessingTimeTrigger re-arm rule (ProcessingTimeTrigger.kt:30-42): on
     # an element, if there is no deadline, or the existing deadline is closer
     # than now+min_retention, set it to now+max_retention; else keep it.
-    now = state.getCurrentProcessingTimeMs()
-    if deadline_ms == 0 or deadline_ms < now + MIN_RETENTION_MS:
-        deadline_ms = now + MAX_RETENTION_MS
-    state.setTimeoutDuration(max(int(deadline_ms - now), 1))
+    if deadline_ms == 0 or deadline_ms < now_ms + MIN_RETENTION_MS:
+        return now_ms + MAX_RETENTION_MS
     return deadline_ms
 
 
-def _event_time_deadline(state: GroupState, deadline_ms: int, max_event_ms: int) -> int:
-    # event-time session gap: the deadline only ever moves FORWARD to
-    # last-event-time + gap (late rows below the old deadline don't
-    # shrink it); fires when the watermark passes it. The watermark moves
-    # once per micro-batch, so a gap over MAX_RETENTION_MS inside one
-    # batch does not split the session.
-    deadline_ms = max(deadline_ms, max_event_ms + MAX_RETENTION_MS)
-    state.setTimeoutTimestamp(deadline_ms)
-    return deadline_ms
+def _event_time_deadline(deadline_ms: int, max_event_ms: int, _: int) -> int:
+    # event-time session gap: the deadline only moves FORWARD, to last
+    # event + gap. The watermark moves once per micro-batch, so a gap over
+    # MAX_RETENTION_MS inside one batch does not split the session.
+    return max(deadline_ms, max_event_ms + MAX_RETENTION_MS)
 
 
-def _session_fn(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-    deadline_rule: Callable[[GroupState, int, int], int],
+def _bucket_fn(
+    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState, event_time: bool
 ) -> Iterator[pd.DataFrame]:
-    """``deadline_rule(state, deadline_ms or 0, max event ms of the batch)``
-    arms the state's timeout and returns the new deadline_ms."""
-    (trip_id,) = key
-    if state.hasTimedOut:
-        st = state.get
+    """One bucket's call, with rows or on its timeout: fold the rows into
+    their trips, close every trip that got none and whose deadline is
+    below the threshold, then arm the bucket's timeout to its earliest
+    open deadline, or remove the bucket once it holds no trip."""
+    if event_time:
+        rule, now_ms = _event_time_deadline, state.getCurrentWatermarkMs()
+    else:
+        rule, now_ms = _processing_time_deadline, state.getCurrentProcessingTimeMs()
+    trips = {st[0]: tuple(st[1:]) for st in state.get[0]} if state.exists else {}
+    fed: dict[int, list[tuple]] = {}  # the call's rows per trip, in arrival order
+    for pdf in pdfs:
+        cols = (
+            pdf["ts"].to_numpy("datetime64[us]").view("int64").tolist(),
+            pdf["start_vin"].tolist(),
+            *(pdf[c].to_numpy("float64").tolist() for c in ("speed_kmh", "lat", "lon")),
+        )
+        for trip_id, row in zip(pdf["trip_id"].tolist(), zip(*cols)):
+            fed.setdefault(trip_id, []).append(row)
+    for trip_id, rows in fed.items():
+        (*st, deadline_ms), max_event_ms = _fold(trips.get(trip_id), rows)
+        trips[trip_id] = (*st, rule(deadline_ms, max_event_ms, now_ms))
+    # a trip fed in this call is never due: either rule puts its deadline
+    # past the threshold, as Spark drops rows behind the watermark
+    due = [trip_id for trip_id, st in trips.items() if st[-1] < now_ms]
+    closed = [_finalize(trip_id, trips.pop(trip_id)) for trip_id in due]
+    if not trips:
         state.remove()
-        yield _finalize(trip_id, st)
-        return
+    else:
+        state.update(([(trip_id, *st) for trip_id, st in trips.items()],))
+        first_ms = min(st[-1] for st in trips.values())
+        if event_time:
+            state.setTimeoutTimestamp(first_ms)
+        else:
+            # durations must be positive, so a deadline equal to this
+            # batch's time is armed 1 ms after it
+            state.setTimeoutDuration(max(first_ms - now_ms, 1))
+    if closed:
+        yield pd.DataFrame(closed, columns=OUTPUT_SCHEMA.fieldNames())
 
-    st, max_event_ms = _fold(state.get if state.exists else None, pdfs)
-    *buffers, deadline_ms = st
-    state.update((*buffers, deadline_rule(state, deadline_ms, max_event_ms)))
 
-
-def _sessionize(
-    parsed_stream: DataFrame,
-    watermark: str,
-    deadline_rule: Callable[[GroupState, int, int], int],
-    timeout: str,
-) -> DataFrame:
-    # Only the columns _fold reads cross into Python: the pandas UDF
-    # converts every column of every group, and the vin is needed only
-    # from TripStart rows. ``ts`` keeps the watermark EventTimeTimeout
-    # needs, so the projection comes after withWatermark.
+def _sessionize(parsed_stream: DataFrame, watermark: str, event_time: bool) -> DataFrame:
+    # Only the key and the columns _fold reads cross into Python; the
+    # projection follows withWatermark, which EventTimeTimeout needs.
     return (
         parsed_stream.withWatermark("ts", watermark)
         .select(
+            F.pmod("trip_id", F.lit(BUCKETS)).alias("bucket"),
             "trip_id",
             "ts",
             F.when(F.col("event_type") == "TripStartRelativeTime", F.col("vin"))
             .alias("start_vin"),
-            "speed_kmh",
-            "lat",
-            "lon",
+            "speed_kmh", "lat", "lon",
         )
-        .groupBy("trip_id")
+        .groupBy("bucket")
         .applyInPandasWithState(
-            partial(_session_fn, deadline_rule=deadline_rule),
+            partial(_bucket_fn, event_time=event_time),
             OUTPUT_SCHEMA,
             STATE_SCHEMA,
             "append",
-            timeout,
+            GroupStateTimeout.EventTimeTimeout
+            if event_time
+            else GroupStateTimeout.ProcessingTimeTimeout,
         )
     )
 
@@ -213,12 +222,7 @@ def sessionize_trips(
     (BoundedOutOfOrdernessTimestampExtractor,
     TripAggregatorApplication.kt:168-174); firing remains purely
     processing-time-driven (the reference's onEventTime is CONTINUE)."""
-    return _sessionize(
-        parsed_stream,
-        watermark,
-        _processing_time_deadline,
-        GroupStateTimeout.ProcessingTimeTimeout,
-    )
+    return _sessionize(parsed_stream, watermark, event_time=False)
 
 
 def sessionize_trips_event_time(
@@ -237,9 +241,4 @@ def sessionize_trips_event_time(
     micro-batch does not split the trip, whereas a per-event gap rule
     (Spark's ``session_window``) would split it.
     """
-    return _sessionize(
-        parsed_stream,
-        watermark,
-        _event_time_deadline,
-        GroupStateTimeout.EventTimeTimeout,
-    )
+    return _sessionize(parsed_stream, watermark, event_time=True)

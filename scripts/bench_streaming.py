@@ -9,7 +9,11 @@ representative stateful shapes a recorded events/s surface:
                      (MinHash banding + index join + parquet append);
 - ``trip_sessions``  events/s through keyed GroupState sessionization
                      (applyInPandasWithState, processing-time timers);
-- ``kmv_stream``     events/s through the per-batch KMV sketch append.
+- ``kmv_stream``     events/s through the per-batch KMV sketch append,
+                     one input file per micro-batch, so each run writes
+                     one changelog epoch per file; after the timed runs,
+                     one sketch read and one compaction of the last
+                     run's changelog are timed on their own.
 
 Method mirrors bench.py's trip-pipeline dual: availableNow (bounded)
 runs over deterministic fixtures, one untimed warm run per stream
@@ -20,7 +24,8 @@ different work). A ``ProgressRecorder`` listens during the timed runs,
 so each stream's record also carries its micro-batches per run, the
 median batch time and the peak state-store rows. Prints ONE JSON line:
   {"streams": {name: events_per_sec, ...}, "samples": {...},
-   "progress": {name: {"batches", "batch_ms_p50", "max_state_rows"}}, ...}
+   "progress": {name: {"batches", "batch_ms_p50", "max_state_rows"}},
+   "kmv_sketch_s": {"read", "compact", "epochs"}, ...}
 and appends nothing to bench.py's record (side-harness by design —
 bench.py's stdout contract stays byte-compatible).
 """
@@ -185,7 +190,11 @@ def main() -> None:
     record("ingest_dedup", n_docs, run_ingest)
 
     # ---- kmv_stream: per-batch KMV sketch changelog -----------------------
-    from flink_template_spark.streaming.sketch_stream import write_kmv_stream
+    from flink_template_spark.streaming.sketch_stream import (
+        compact_kmv,
+        read_kmv,
+        write_kmv_stream,
+    )
 
     ev_dir = os.path.join(work, "kmv_in")
     os.makedirs(ev_dir, exist_ok=True)
@@ -218,18 +227,40 @@ def main() -> None:
     )
 
     def run_kmv(tag: str):
+        # the sketch directory stays (under ``work``) for the read below
         sk = os.path.join(work, f"kmv_out_{tag}")
         ckpt = os.path.join(work, f"kmv_ckpt_{tag}")
-        stream = spark.readStream.schema(ev_schema).json(ev_dir)
+        stream = (
+            spark.readStream.schema(ev_schema).option("maxFilesPerTrigger", 1).json(ev_dir)
+        )
         q = write_kmv_stream(stream, sk, ckpt, available_now=True)
         if not q.awaitTermination(600):
             q.stop()
             raise TimeoutError("kmv_stream availableNow exceeded 600s")
-        shutil.rmtree(sk, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
         return q
 
     record("kmv_stream", n_kmv_events, run_kmv)
+
+    # The readers' cost grows with the unfolded epochs: time one read of
+    # the last timed run's changelog, then one compaction of it, and check
+    # the compacted base estimates the same counts.
+    kmv_sketch_s: dict[str, float] = {}
+    if "kmv_stream" in results:
+        sk = os.path.join(work, f"kmv_out_t{RUNS - 1}")
+        try:
+            log = os.listdir(os.path.join(sk, "changelog"))
+            kmv_sketch_s["epochs"] = sum(n.startswith("epoch=") for n in log)
+            t0 = time.perf_counter()
+            before = sorted(read_kmv(spark, sk).collect())
+            kmv_sketch_s["read"] = round(time.perf_counter() - t0, 3)
+            t0 = time.perf_counter()
+            compact_kmv(spark, sk)
+            kmv_sketch_s["compact"] = round(time.perf_counter() - t0, 3)
+            if sorted(read_kmv(spark, sk).collect()) != before:
+                errors["kmv_sketch"] = "compacted sketch estimates differ from the changelog's"
+        except Exception as exc:
+            errors["kmv_sketch"] = f"{type(exc).__name__}: {str(exc)[:300]}"
 
     shutil.rmtree(work, ignore_errors=True)
     out = {
@@ -237,6 +268,7 @@ def main() -> None:
         "streams": results,
         "samples": samples,
         "progress": progress,
+        "kmv_sketch_s": kmv_sketch_s,
         "fixture": {
             "trip_sessions": n_trip_events,
             "ingest_dedup": n_docs,

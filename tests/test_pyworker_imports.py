@@ -77,12 +77,9 @@ def test_trip_stream_udf_installs_the_fix_in_a_fresh_worker():
     the stream's session function; that unpickle must install the fix."""
     from pyspark import cloudpickle
 
-    from flink_template_spark.streaming.trip_sessions import (
-        _event_time_deadline,
-        _session_fn,
-    )
+    from flink_template_spark.streaming.trip_sessions import _bucket_fn
 
-    payload = cloudpickle.dumps(partial(_session_fn, deadline_rule=_event_time_deadline))
+    payload = cloudpickle.dumps(partial(_bucket_fn, event_time=True))
     code = (
         "import pickle, sys, zipimport\n"
         "before = zipimport.zipimporter.invalidate_caches.__module__\n"
@@ -101,6 +98,6 @@ def test_trip_stream_udf_installs_the_fix_in_a_fresh_worker():
     )
     assert out.stdout.decode().split() == [
         "zipimport",
-        "_session_fn",
+        "_bucket_fn",
         "flink_template_spark._zipimport_compat",
     ]
