@@ -175,19 +175,16 @@ def main() -> None:
             )
         # warm the JSON-scan schema + codegen path like the headline warm-up,
         # so the reported rate is steady-state, not first-run compilation.
-        # The operator persists its projected input; drop the warm-up's cache
-        # so the TIMED run pays the full parse + materialize + aggregate cost
-        # (reporting a warm-cache rerun would measure cache reads, not the
-        # pipeline). TWO warm runs since r10: the r10 idle-band measurement
-        # (BASELINE.md) showed the JSON-parse JIT keeps climbing for several
-        # runs (223k -> 448k ev/s across five best-of-2 samples in one
-        # session), so a single warm run left the recorded rate anywhere in
-        # a +-40% band — the source of the driver's 394k/584k round-over-
-        # round swings on unchanged code.
+        # The operator caches nothing, so each TIMED run pays the full
+        # parse + aggregate cost. TWO warm runs since r10: the r10 idle-band
+        # measurement (BASELINE.md) showed the JSON-parse JIT keeps climbing
+        # for several runs (223k -> 448k ev/s across five best-of-2 samples
+        # in one session), so a single warm run left the recorded rate
+        # anywhere in a +-40% band — the source of the driver's 394k/584k
+        # round-over-round swings on unchanged code.
         for _ in range(2):
             warm = aggregate_trips(read_trip_events_json(spark, fx))
             warm.write.format("noop").mode("overwrite").save()
-            warm.input.unpersist(True)
         # 3-sample band (VERDICT r10 next #3): the recorded rate is the
         # BEST of three timed runs, and all three per-sample rates are
         # recorded alongside the 1-min load average taken right before
@@ -201,7 +198,6 @@ def main() -> None:
             t0 = time.perf_counter()
             timed.write.format("noop").mode("overwrite").save()
             w = time.perf_counter() - t0
-            timed.input.unpersist(True)
             trip_samples.append(round(n_events / w, 1))
         trip_steal = round(trip0.steal_share_until(CpuSample.now()), 4)
         trip_eps = max(trip_samples)

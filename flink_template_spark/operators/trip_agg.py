@@ -11,167 +11,147 @@ Semantics implemented (intended semantics; reference bugs documented):
 - A6 distance: haversine over consecutive ts-ordered GPS points.
   Reference bugs NOT reproduced: Q6 (lat/lon swap inside haversine) and
   Q3 (km stored in a field named meters) — we compute standard
-  haversine and name the column ``distance_km``.
+  haversine and name the column ``distance_km``. A hop with a NULL
+  endpoint (a reading without longitude) counts 0.
 - A7 stopped time: maximal runs of speed < 5 km/h
   (TripAggregatorApplication.kt:132); per-run duration max(ts)-min(ts)
-  summed. Q7 (negative deltas) not reproduced — durations are positive.
+  summed, each reading's ts floored to epoch seconds first (Q5). Q7
+  (negative deltas) not reproduced — durations are positive.
 - A8 total duration: max−min epoch-second over the union of GPS and
   speed timestamps (TripAggregatorApplication.kt:108-118,142-145);
   reference uses epoch *seconds* (Q5) — we keep second granularity.
 - A9 moving = total − stopped.
 - Q1: TripEnd / TripEvent rows contribute nothing.
 
-Scale: every window and group-by in the operator partitions on
-``trip_id`` alone, so Catalyst plans ONE exchange per branch (GPS /
-speed / base — three total) and every downstream sort, window,
-aggregate, and join reuses that partitioning with no further shuffle.
-The equal-ts dedup is a lag-over-(ts, seq) comparison (not a
-(trip, ts)-partitioned row_number, which would force a second exchange
-per branch), and stopped time folds consecutive same-run deltas instead
-of grouping by a run id (which would shuffle on (trip, run)). The
-parsed input is projected to 7 narrow columns and persisted
-MEMORY_AND_DISK before the three branch scans — re-executing the JSON
-parse per branch costs more than spilling the projection at any scale
-(``materialize=False`` opts out; callers may unpersist via the
-``.input`` attribute on the result).
+Scale: one ``groupBy(trip_id)``, so the plan has ONE exchange and no
+window, join or cache. Each trip's GPS and speed readings become one
+sorted array row at the group, a per-trip bound like the stream's
+state entry (streaming.trip_sessions); the dedup, hops and stopped
+deltas are array expressions over that row. Stopped time sums the
+deltas between consecutive readings that are both stopped: a maximal
+stopped run's max(ts)−min(ts) equals its deltas' sum, so no run ids.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+from pyspark.sql import types as T
 
 from flink_template_spark.functions.geo import haversine_km
 
 STOPPED_SPEED_KMH = 5
 
+# One trip row, for both tiers (streaming.trip_sessions emits it too).
+OUTPUT_SCHEMA = T.StructType(
+    [
+        T.StructField("trip_id", T.LongType()),
+        T.StructField("vehicle_id", T.StringType()),
+        T.StructField("n_events", T.LongType()),
+        T.StructField("distance_km", T.DoubleType()),
+        T.StructField("total_s", T.LongType()),
+        T.StructField("moving_s", T.LongType()),
+        T.StructField("stopped_s", T.LongType()),
+    ]
+)
 
-def aggregate_trips(parsed: DataFrame, materialize: bool = True) -> DataFrame:
-    """Parsed trip events → one row per trip.
 
-    Output: trip_id, vehicle_id, n_events, distance_km, total_s,
-    moving_s, stopped_s.
-    """
+def _readings(*fields: str, present: str) -> F.Column:
+    """A trip's readings with ``present`` set, as (ts, seq, *fields)
+    structs in (ts, seq) order."""
+    return F.array_sort(
+        F.collect_list(
+            F.when(F.col(present).isNotNull(), F.struct("ts", "seq", *fields))
+        )
+    )
+
+
+def _first_per_ts(name: str) -> F.Column:
+    """Q4 over sorted readings: an element survives iff the previous
+    element's ts differs, i.e. the first arrival of each ts. A projection
+    of its own, so the sort is not inlined into the lambda twice."""
+    rs = F.col(name)
+    return F.filter(
+        rs, lambda r, i: (i == 0) | (F.get(rs, i - 1)["ts"] != r["ts"])
+    ).alias(name)
+
+
+def _pairs_sum(rs: F.Column, f, zero: F.Column) -> F.Column:
+    """Σ f(prev, next) over adjacent elements of ``rs``. zip_with pads the
+    shifted array's tail with NULL, so the last pair's ``next`` is NULL;
+    ``f`` must map a NULL operand to ``zero``."""
+    return F.aggregate(
+        F.zip_with(rs, F.slice(rs, 2, F.size(rs)), f), zero, lambda acc, x: acc + x
+    )
+
+
+def aggregate_trips(parsed: DataFrame) -> DataFrame:
+    """Parsed trip events → one OUTPUT_SCHEMA row per trip, from one
+    ``groupBy(trip_id)`` fold."""
     # ingest-order tiebreak for the Q4 equal-ts dedup. Deterministic per
-    # input split ordering (like the reference's arrival order); the
-    # persist below also pins one evaluation of it for all branches.
-    # Prefer the parse layer's ingest_seq: referencing it keeps parse's
+    # input split ordering (like the reference's arrival order). Prefer
+    # the parse layer's ingest_seq: referencing it keeps parse's
     # optimizer barrier alive (parse.py — dropping it would let the
     # pushed validity filter re-parse the JSON per condition).
-    cols = ["trip_id", "ts", "event_type", "vin", "speed_kmh", "lat", "lon"]
     if "ingest_seq" in parsed.columns:
-        ev = parsed.select(*cols, F.col("ingest_seq").alias("seq"))
+        seq = F.col("ingest_seq")
     else:
-        ev = parsed.select(*cols).withColumn(
-            "seq", F.monotonically_increasing_id()
-        )
-    if materialize:
-        ev = ev.persist(StorageLevel.MEMORY_AND_DISK)
-
-    # one window family: hash-partition by trip, order by (ts, seq)
-    w_ord = W.partitionBy("trip_id").orderBy("ts", "seq")
-
-    def dedup_equal_ts(df: DataFrame) -> DataFrame:
-        # Q4: keep the first arrival of each (trip, ts) — in (ts, seq)
-        # order a row is first for its ts iff the previous row's ts
-        # differs. Same partitioning as every other step.
-        return df.withColumn("__prev_ts", F.lag("ts").over(w_ord)).filter(
-            F.col("__prev_ts").isNull() | (F.col("__prev_ts") != F.col("ts"))
-        ).drop("__prev_ts")
-
-    # --- GPS stream: dedup equal ts, order, fold haversine hops.
-    gps = ev.filter(F.col("lat").isNotNull()).select(
-        "trip_id", "ts", "seq", "lat", "lon"
-    )
-    gps1 = dedup_equal_ts(gps)
-    hops = gps1.select(
-        "trip_id",
-        "ts",
-        F.when(F.lag("lat").over(w_ord).isNull(), F.lit(0.0))
-        .otherwise(
-            haversine_km(
-                F.lag("lat").over(w_ord),
-                F.lag("lon").over(w_ord),
-                F.col("lat"),
-                F.col("lon"),
-            )
-        )
-        .alias("hop_km"),
-    )
-    dist = hops.groupBy("trip_id").agg(
-        F.sum("hop_km").alias("distance_km"),
-        F.min("ts").alias("gps_min_ts"),
-        F.max("ts").alias("gps_max_ts"),
+        seq = F.monotonically_increasing_id()
+    ev = parsed.select(
+        "trip_id", "ts", "event_type", "vin", "speed_kmh", "lat", "lon", seq.alias("seq")
     )
 
-    # --- speed stream: dedup equal ts, fold stopped time per run.
-    # A maximal stopped run's duration max(ts)−min(ts) equals the sum of
-    # consecutive-row deltas inside the run, so Σ runs = Σ deltas over
-    # row pairs that are BOTH stopped — no run ids, no extra shuffle.
-    speeds = ev.filter(F.col("speed_kmh").isNotNull()).select(
-        "trip_id", "ts", "seq", "speed_kmh"
-    )
-    sp1 = dedup_equal_ts(speeds).withColumn(
-        "is_stopped", F.col("speed_kmh") < STOPPED_SPEED_KMH
-    )
-    deltas = sp1.select(
-        "trip_id",
-        "ts",
-        F.when(
-            F.col("is_stopped") & F.coalesce(F.lag("is_stopped").over(w_ord), F.lit(False)),
-            F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w_ord)),
-        )
-        .otherwise(F.lit(0))
-        .alias("stopped_delta_s"),
-    )
-    speed_agg = deltas.groupBy("trip_id").agg(
-        F.sum("stopped_delta_s").alias("stopped_s_raw"),
-        F.min("ts").alias("sp_min_ts"),
-        F.max("ts").alias("sp_max_ts"),
-    )
-    stopped = speed_agg.select(
-        "trip_id", F.col("stopped_s_raw").alias("stopped_s")
-    )
-    speed_span = speed_agg.select("trip_id", "sp_min_ts", "sp_max_ts")
-
-    # --- per-trip base: vehicle id (first TripStart's vin), event count.
-    base = ev.groupBy("trip_id").agg(
+    per_trip = ev.groupBy("trip_id").agg(
         F.min_by(
             "vin", F.when(F.col("event_type") == "TripStartRelativeTime", F.col("seq"))
         ).alias("vehicle_id"),
         F.count(F.lit(1)).alias("n_events"),
+        _readings("lat", "lon", present="lat").alias("gps"),
+        _readings("speed_kmh", present="speed_kmh").alias("sp"),
+    ).select(
+        "trip_id", "vehicle_id", "n_events", _first_per_ts("gps"), _first_per_ts("sp")
     )
 
-    # --- A8: duration over the union of GPS-ts and speed-ts spans.
-    out = (
-        base.join(dist, "trip_id", "left")
-        .join(speed_span, "trip_id", "left")
-        .join(stopped, "trip_id", "left")
-        .select(
-            "trip_id",
-            "vehicle_id",
-            "n_events",
-            F.coalesce("distance_km", F.lit(0.0)).alias("distance_km"),
-            (
-                F.unix_timestamp(
-                    F.greatest(F.col("gps_max_ts"), F.col("sp_max_ts"))
-                )
-                - F.unix_timestamp(F.least(F.col("gps_min_ts"), F.col("sp_min_ts")))
-            ).alias("span_s"),
-            F.coalesce("stopped_s", F.lit(0)).alias("stopped_s"),
-        )
-        .select(
-            "trip_id",
-            "vehicle_id",
-            "n_events",
-            "distance_km",
-            F.coalesce("span_s", F.lit(0)).cast("long").alias("total_s"),
-            F.col("stopped_s").cast("long").alias("stopped_s"),
-            (F.coalesce("span_s", F.lit(0)) - F.col("stopped_s"))
-            .cast("long")
-            .alias("moving_s"),
-        )
+    # A6: a hop with a NULL endpoint counts 0, as a SQL sum skips it
+    dist = _pairs_sum(
+        F.col("gps"),
+        lambda a, b: F.coalesce(
+            haversine_km(a["lat"], a["lon"], b["lat"], b["lon"]), F.lit(0.0)
+        ),
+        F.lit(0.0),
     )
-    out.input = ev  # the persisted projection, for callers to unpersist
+    # A7 with Q5: each stopped delta between epoch-second floors
+    stopped = _pairs_sum(
+        F.col("sp"),
+        lambda a, b: F.when(
+            (a["speed_kmh"] < STOPPED_SPEED_KMH) & (b["speed_kmh"] < STOPPED_SPEED_KMH),
+            F.unix_timestamp(b["ts"]) - F.unix_timestamp(a["ts"]),
+        ).otherwise(0),
+        F.lit(0).cast("long"),
+    )
+    # A8: span over the union of both arrays' timestamps
+    span = F.coalesce(
+        F.unix_timestamp(
+            F.greatest(F.array_max("gps")["ts"], F.array_max("sp")["ts"])
+        )
+        - F.unix_timestamp(
+            F.least(F.array_min("gps")["ts"], F.array_min("sp")["ts"])
+        ),
+        F.lit(0),
+    )
+    # moving_s in a second projection, so the stopped fold runs once
+    out = (
+        per_trip.select(
+            "trip_id",
+            "vehicle_id",
+            "n_events",
+            dist.alias("distance_km"),
+            span.alias("total_s"),
+            stopped.alias("stopped_s"),
+        )
+        .withColumn("moving_s", F.col("total_s") - F.col("stopped_s"))
+        .select(*OUTPUT_SCHEMA.fieldNames())
+    )
+    # kept only for perfbench's ``agg.input.unpersist``; nothing is persisted
+    out.input = ev
     return out

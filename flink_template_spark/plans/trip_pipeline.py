@@ -189,9 +189,7 @@ def _rounded(df: DataFrame) -> DataFrame:
 @register("q_trip_pipeline_json", oracle=_TRIP_PIPELINE_ORACLE)
 def q_trip_pipeline_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     parsed = read_trip_events_json(spark, _fixture_path())
-    # 20-line fixture: re-scanning is cheaper than leaving a persisted
-    # projection behind in the driver's long-lived session
-    return _rounded(aggregate_trips(parsed, materialize=False)).orderBy("trip_id")
+    return _rounded(aggregate_trips(parsed)).orderBy("trip_id")
 
 
 @register("q_trip_pipeline_datasource", oracle=_TRIP_PIPELINE_ORACLE)
@@ -206,4 +204,4 @@ def q_trip_pipeline_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     parsed = read_trip_events_datasource(spark, _fixture_path(), num_partitions=4)
-    return _rounded(aggregate_trips(parsed, materialize=False)).orderBy("trip_id")
+    return _rounded(aggregate_trips(parsed)).orderBy("trip_id")

@@ -38,24 +38,12 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from flink_template_spark.functions.geo import haversine_km_scalar
-from flink_template_spark.operators.trip_agg import STOPPED_SPEED_KMH
+from flink_template_spark.operators.trip_agg import OUTPUT_SCHEMA, STOPPED_SPEED_KMH
 
 MIN_RETENTION_MS = 10
 MAX_RETENTION_MS = 4000
 # GroupState keys; fixed, since a checkpoint's state is keyed by them
 BUCKETS = 16
-
-OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("trip_id", T.LongType()),
-        T.StructField("vehicle_id", T.StringType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("distance_km", T.DoubleType()),
-        T.StructField("total_s", T.LongType()),
-        T.StructField("moving_s", T.LongType()),
-        T.StructField("stopped_s", T.LongType()),
-    ]
-)
 
 # One open trip: PID-bearing readings only, DEDUPED by timestamp ON
 # INSERT (the reference's TreeSet, TripAggregation.kt:17-19 / quirk Q4),
@@ -79,23 +67,24 @@ STATE_SCHEMA = T.StructType([T.StructField("trips", T.ArrayType(TRIP_STATE))])
 
 def _finalize(trip_id: int, st: tuple) -> tuple:
     """A6-A9 over one session's state (TRIP_STATE after trip_id) → an
-    OUTPUT_SCHEMA row. See operators.trip_agg for the quirk ledger,
-    including why stopped time sums deltas between stopped readings."""
+    OUTPUT_SCHEMA row, by the batch tier's rules (operators.trip_agg has
+    the quirk ledger): a hop with a NULL (NaN) endpoint counts 0, and
+    each stopped delta is taken between epoch-second floors."""
     gps_ts, gps_lat, gps_lon, sp_ts, sp_kmh, vin, n_events, _ = st
     gps = sorted(zip(gps_ts, gps_lat, gps_lon))
-    dist = sum(
+    hops = (
         haversine_km_scalar(la0, lo0, la1, lo1)
         for (_, la0, lo0), (_, la1, lo1) in zip(gps, gps[1:])
     )
+    dist = sum(hop for hop in hops if hop == hop)  # a NaN hop counts 0
     sp = sorted(zip(sp_ts, sp_kmh))
-    stopped_us = sum(
-        t1 - t0
+    stopped_s = sum(
+        t1 // 1_000_000 - t0 // 1_000_000
         for (t0, v0), (t1, v1) in zip(sp, sp[1:])
         if v0 < STOPPED_SPEED_KMH and v1 < STOPPED_SPEED_KMH
     )
     all_ts = [*gps_ts, *sp_ts]
     total_s = (max(all_ts) // 1_000_000 - min(all_ts) // 1_000_000) if all_ts else 0
-    stopped_s = stopped_us // 1_000_000
     return (trip_id, vin, n_events, float(dist), total_s, total_s - stopped_s, stopped_s)
 
 
@@ -166,8 +155,10 @@ def _bucket_fn(
     for trip_id, rows in fed.items():
         (*st, deadline_ms), max_event_ms = _fold(trips.get(trip_id), rows)
         trips[trip_id] = (*st, rule(deadline_ms, max_event_ms, now_ms))
-    # a trip fed in this call is never due: either rule puts its deadline
-    # past the threshold, as Spark drops rows behind the watermark
+    # every trip below the threshold is due, fed in this call or not:
+    # Spark passes rows behind the watermark to this function, so an
+    # event-time trip fed only rows over MAX_RETENTION_MS behind it
+    # closes in this same call
     due = [trip_id for trip_id, st in trips.items() if st[-1] < now_ms]
     closed = [_finalize(trip_id, trips.pop(trip_id)) for trip_id in due]
     if not trips:

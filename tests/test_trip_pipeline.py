@@ -12,7 +12,7 @@ import math
 import pytest
 
 from flink_template_spark.parse import read_trip_events_json
-from flink_template_spark.operators.trip_agg import aggregate_trips
+from flink_template_spark.operators.trip_agg import OUTPUT_SCHEMA, aggregate_trips
 from flink_template_spark.sources.trip_fixtures import (
     TRIP1_POINTS,
     TRIP2_POINTS,
@@ -140,10 +140,28 @@ def test_aggregate_trips_empty_input(spark):
     empty = spark.createDataFrame([], "value STRING")
     out = aggregate_trips(parse_trip_events(empty))
     assert out.count() == 0
-    assert [f.name for f in out.schema] == [
-        "trip_id", "vehicle_id", "n_events", "distance_km",
-        "total_s", "stopped_s", "moving_s",
+    # the one trip row of both tiers: names, order and types
+    assert [(f.name, f.dataType) for f in out.schema] == [
+        (f.name, f.dataType) for f in OUTPUT_SCHEMA
     ]
+
+
+def test_aggregate_trips_is_one_fold(spark, tmp_path):
+    """The batch fold is one ``groupBy(trip_id)``: one exchange, no
+    window, join or cache, and a collect leaves nothing cached for a
+    later plan over the same input to read."""
+    import re
+
+    p = tmp_path / "e.jsonl"
+    write_fixture(str(p))
+    out = aggregate_trips(read_trip_events_json(spark, str(p)))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
+    for node in ("Window", "Join", "InMemoryRelation", "InMemoryTableScan"):
+        assert node not in plan, plan
+    out.collect()
+    again = aggregate_trips(read_trip_events_json(spark, str(p)))
+    assert "InMemory" not in again._jdf.queryExecution().optimizedPlan().toString()
 
 
 def test_parse_evaluates_from_json_once(spark, tmp_path):
